@@ -1,33 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Accumulates shuffle/spill bytes and executor CPU-time across completed
-  * stages so Bench can attribute them per query (snapshot-delta around each
-  * run). CPU-time is the load-invariant timing signal: host load stretches
-  * wall-clock but not cycles consumed, so a wall regression with flat
-  * cpu_sec is host noise, not a plan change. Stage events
-  * arrive asynchronously; the small post-query drain in Bench makes the
-  * attribution accurate in practice and any residue lands on the NEXT
-  * query — fine for the two-decimal MB reporting this feeds.
-  */
-private final class ShuffleAccounting extends SparkListener {
-  @volatile var shuffleReadB = 0L
-  @volatile var shuffleWriteB = 0L
-  @volatile var spillB = 0L
-  @volatile var cpuNs = 0L
-  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-    val m = s.stageInfo.taskMetrics
-    if (m != null) {
-      shuffleReadB += m.shuffleReadMetrics.totalBytesRead
-      shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
-      spillB += m.diskBytesSpilled
-      cpuNs += m.executorCpuTime
-    }
-  }
-  def snapshot: (Long, Long, Long, Long) =
-    (shuffleReadB, shuffleWriteB, spillB, cpuNs)
-}
+import graft.tools.StageMetrics
 
 /** Per-round benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line, exits nonzero if any query
@@ -46,20 +20,12 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     // per-stage wall attribution for the corpus composition (the family
     // whose wall time gets adjudicated round-over-round): forces each
     // cached gate frame inside a PhaseTimer span — see Graft.phased
     System.setProperty("graft.phases.corpus", "1")
-    val acct = new ShuffleAccounting
-    spark.sparkContext.addSparkListener(acct)
+    val acct = StageMetrics.attach(spark.sparkContext)
     // Host-load evidence: wall-clock on this box drifts ±20-60% under
     // external load (verify notes), so each pass brackets itself with
     // /proc/loadavg samples and every query additionally records executor
@@ -188,7 +154,7 @@ object Bench {
       // brackets average away is adjudicable from the artifact alone
       val load1 = loadavg.split(" ").headOption.getOrElse("?")
       val m0 = extMark()
-      val s0 = acct.snapshot
+      val s0 = acct.read()
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count()
       catch {
@@ -197,12 +163,10 @@ object Bench {
             Option(e.getMessage).getOrElse("").take(200)
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(30) // let async stage-completed events drain
-      val s1 = acct.snapshot
+      val d = acct.read() - s0
       val m1 = extMark()
-      (name, sec,
-        (s1._1 - s0._1) / 1e6, (s1._2 - s0._2) / 1e6, (s1._3 - s0._3) / 1e6,
-        (s1._4 - s0._4) / 1e9, load1, extCpuSec(m0, m1))
+      (name, sec, d.shuffleReadB / 1e6, d.shuffleWriteB / 1e6, d.spillB / 1e6,
+        d.cpuSec, load1, extCpuSec(m0, m1))
     }
     val loadAfterCold = loadavg
     // Second, WARM pass (skippable via SPARK_GRAFT_WARM=0): same order,
@@ -211,7 +175,7 @@ object Bench {
     // headline (they are what a fresh cluster pays and what BASELINE.md
     // compares against); the warm map lands in BENCH_DETAIL.json so a
     // cold-run drift (suite ordering, Janino compile, JIT) can be triaged
-    // from the detail file without hand-running SeqTime. The memoized ML
+    // from the detail file without a hand-run Probe. The memoized ML
     // pair is excluded — its second run would measure the memo, not the
     // work.
     // NonFatal only, and an errored query is OMITTED from the warm maps —
@@ -222,15 +186,14 @@ object Bench {
       else plainQs.flatMap { case (name, fn) =>
         spark.catalog.clearCache()
         System.gc()
-        val s0 = acct.snapshot
+        val s0 = acct.read()
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
           catch { case scala.util.control.NonFatal(_) => false }
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(30)
-        val s1 = acct.snapshot
-        if (ok) Some(name -> (sec, (s1._4 - s0._4) / 1e9)) else None
+        val cpu = (acct.read() - s0).cpuSec
+        if (ok) Some(name -> (sec, cpu)) else None
       }.toMap
     val loadAfterWarm = loadavg
     // MID-RUN CONTENTION HEALING (r16): the r15 gate proves a quiet
@@ -285,15 +248,14 @@ object Bench {
       } else healable.flatMap { name =>
         spark.catalog.clearCache()
         System.gc()
-        val s0 = acct.snapshot
+        val s0 = acct.read()
         val t0 = System.nanoTime()
         val ok =
           try { SparkEntry.queries(name)(spark, sfDir).count(); true }
           catch { case scala.util.control.NonFatal(_) => false }
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(30)
-        val s1 = acct.snapshot
-        if (ok) Some(name -> (sec, (s1._4 - s0._4) / 1e9)) else None
+        val cpu = (acct.read() - s0).cpuSec
+        if (ok) Some(name -> (sec, cpu)) else None
       }.toMap
     // Shared-artifact attribution: per-query clearCache is the correct
     // isolation cadence (each query pays exactly its own plan), but it
@@ -592,5 +554,23 @@ object Bench {
     println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","quiet":$quiet,"cold_start_load1":${jnum(l1)},$contendedJson,$newQJson,"queries":$qs,"ml_fused":${jnum(mlFused)},"shared":$sharedJson,"errors":$errJson,"sf":"$sfDir","detail":"BENCH_DETAIL.json"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  /** The benchmark session: `local[cpus]` with one shuffle partition per
+    * core, AQE, UTC and [[SessionTuning]], then `confs`. Probe and
+    * PipelineScale build theirs here too, so their readings are Bench's.
+    */
+  def session(cpus: String,
+      confs: Seq[(String, String)] = Nil): SparkSession = {
+    val spark = confs.foldLeft(SessionTuning(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))) { case (b, (k, v)) =>
+      b.config(k, v)
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * near-empty partitions per cached frame, and each task re-deserializes
   * the ~1 MB task binary (the "Broadcasting large task binary" warnings),
   * burning ~50-90 ms of fixed CPU per task. Measured at sf0.1/local[32]
-  * (ConfProbe, cold executor-CPU): q_rolling_actives 9.7→0.85 cpu-s
+  * (cold executor-CPU, conf off vs on): q_rolling_actives 9.7→0.85 cpu-s
   * (133→9 tasks), q_pagerank3 81.8→30.9 (558→185), q_copurchase_degree
   * 44.6→13.6 (203→56) — each landing on its 8-core CPU reading, i.e. the
   * 32-core CPU inflation was exactly this per-task fixed cost. At real

@@ -42,14 +42,17 @@ object Dashboard {
 
   /** Model-insight page: feature correlations vs target, |r| < 0.999
     * filter + top-15 (A10, `streamlit_app.py:542-555`) — one aggregation
-    * pass, not a per-column pandas loop.
+    * pass, not a per-column pandas loop. A constant candidate has no
+    * correlation and is dropped, as the reference's NaN fails its filter.
     */
   def topCorrelations(features: DataFrame, target: String,
                       candidates: Seq[String], k: Int = 15)
       : Seq[(String, Double)] = {
-    val row = Queries.corrAgainst(features, target, candidates).head()
-    candidates.zipWithIndex
-      .map { case (c, i) => c -> (if (row.isNullAt(i)) 0.0 else row.getDouble(i)) }
+    val byFeature = Queries.corrAgainst(features, target, candidates)
+      .collect()
+      .collect { case row if !row.isNullAt(1) => row.getString(0) -> row.getDouble(1) }
+      .toMap
+    candidates.flatMap(c => byFeature.get(c).map(c -> _))
       .filter { case (_, r) => math.abs(r) < 0.999 }
       .sortBy { case (_, r) => -math.abs(r) }
       .take(k)

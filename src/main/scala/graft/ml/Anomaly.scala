@@ -48,8 +48,9 @@ object Anomaly {
     // join+features lineage (lifecycle: session-LRU, same policy as
     // withDist). Fit on the compacted view — KMeans is iterative, the same
     // scheduling-overhead lever as the tree grids (Forecast.sizedForTrees'
-    // measured A/B); the TRANSFORM stays on the 32-partition view so
-    // downstream partitioning is untouched. Cluster floats legitimately
+    // measured A/B); the TRANSFORM runs on the cached input itself, so
+    // downstream partitioning is whatever AQE sized that cache to (never
+    // a fixed 32 since SessionTuning). Cluster floats legitimately
     // vary with fit partitioning (init sampling) — the verification
     // contract pins metric invariants and the oracled key envelope, never
     // cluster-float hashes.

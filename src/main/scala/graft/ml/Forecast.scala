@@ -154,7 +154,7 @@ object Forecast {
     * (measured 103 s → seconds for the RF grid at sf0.1). But the floor
     * matters as much as the ceiling: the grid fits CONCURRENTLY (4 points
     * at once), so 1 partition per fit strands all but 4 cores. The r10
-    * MlPhases A/B at sf0.1 (each config twice, JIT-warmed): 1 part 11.9 s,
+    * A/B at sf0.1 (each config twice, JIT-warmed): 1 part 11.9 s,
     * 4 parts 7.6 s, 8 parts 6.1 s, 32 parts 7.7 s for the 4-point grid —
     * the optimum is partitions-per-fit ≈ cores / concurrent-fits. Target
     * ~2k rows per partition, capped at the cluster parallelism: at 100 TB

@@ -637,11 +637,12 @@ object RelationalQueries {
         if (bcastNodes) broadcast(df) else df
       // Plan shape (r10→r11 rework, measured in SCALING.md): everything
       // node-sized — the degree frame and each iteration's rank frame —
-      // is BROADCAST (nodes here are the part dimension, broadcastable by
-      // the same logic as every dim join; for a web-scale node set flip
-      // the iteration join to the src-partitioned shuffle shape), and the
-      // edge-sized `weighted` frame is cached PRE-PARTITIONED BY dst, so
-      // each iteration is: broadcast-hash-join (no edge shuffle) →
+      // goes through `nodeSized`: BROADCAST up to the 2^18-row budget
+      // above (nodes here are the part dimension, broadcastable by the
+      // same logic as every dim join), un-hinted beyond it so AQE picks
+      // the join from runtime sizes. The edge-sized `weighted` frame is
+      // cached PRE-PARTITIONED BY dst, so each broadcast iteration is:
+      // broadcast-hash-join (no edge shuffle) →
       // groupBy(dst) whose exchange is already satisfied by the cache's
       // partitioning. Zero edge-sized shuffles per iteration, vs 1–2 in
       // the r10 shape; the whole 3-step unroll is ONE linear-lineage job

@@ -2,12 +2,13 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Bridge to the `private[spark]` listener bus drain — measurement tools
-  * (PipelineScale) read SparkListener-accumulated CPU counters right
-  * after a blocking action returns, but stage-completed events deliver
-  * asynchronously on the bus thread; without a drain a stage's tail CPU
-  * is misattributed to the next stage. Same access-modifier-only pattern
-  * as [[org.apache.spark.sql.graft.ColumnBridge]].
+/** Bridge to the `private[spark]` listener bus drain — measurements
+  * (`graft.tools.StageMetrics.read`, perfbench's listener) read
+  * listener-accumulated counters right after a blocking action returns,
+  * but stage-completed events deliver asynchronously on the bus thread;
+  * without a drain a stage's tail CPU is misattributed to the next window.
+  * Same access-modifier-only pattern as
+  * [[org.apache.spark.sql.graft.ColumnBridge]].
   */
 object ListenerBridge {
   def drain(sc: SparkContext): Unit =

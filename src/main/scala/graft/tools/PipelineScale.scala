@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.EnergyPipeline
@@ -21,27 +20,18 @@ import graft.pipeline.EnergyPipeline
   * The synthetic half-hourly CSV is deterministic (value = seasonal +
   * slot + per-household component; one "Null" sentinel per day; same
   * shape as the spec fixture, parameterized) and generated DISTRIBUTED —
-  * households × days × 48 rows never assemble on the driver.
+  * households × days × 48 rows never assemble on the driver. The session
+  * is Bench's, on every core.
   */
 object PipelineScale {
-
-  private final class CpuAccounting extends SparkListener {
-    @volatile var cpuNs = 0L
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      cpuNs += s.stageInfo.taskMetrics.executorCpuTime
-  }
 
   def main(args: Array[String]): Unit = {
     val Array(workDir, hhStr, daysStr) = args.take(3)
     val households = hhStr.toInt
     val days = daysStr.toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val acct = new CpuAccounting
-    spark.sparkContext.addSparkListener(acct)
+    val spark = graft.Bench.session(
+      Runtime.getRuntime.availableProcessors().toString)
+    val acct = StageMetrics.attach(spark.sparkContext)
 
     // --- deterministic half-hourly CSV, generated distributed ---
     val slots = days * 48
@@ -82,16 +72,12 @@ object PipelineScale {
 
     def stage(name: String)(body: => Long): Unit = {
       spark.sparkContext.setJobGroup(name, name)
-      // drain the listener bus around the delta: stage-completed events
-      // deliver async, so without it a stage's tail CPU bills to the next
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-      val cpu0 = acct.cpuNs
+      val m0 = acct.read()
       val t0 = System.nanoTime()
       val rows = body
       val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-      val cpu = (acct.cpuNs - cpu0) / 1e9
-      println(f"[pipescale] $name: wall=$wall%.2f s cpu=$cpu%.2f s rows=$rows")
+      val m = acct.read() - m0
+      println(f"[pipescale] $name: wall=$wall%.2f s ${m.show} rows=$rows")
     }
 
     def rd(name: String): DataFrame =

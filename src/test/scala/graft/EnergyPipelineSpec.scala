@@ -129,6 +129,24 @@ class EnergyPipelineSpec extends SparkSpec {
     graft.io.Writers.csv(merged,
       java.nio.file.Files.createTempDirectory("graft-export").toString + "/m",
       gzip = true)
+    // correlations page over every numeric feature column: `year` is
+    // constant (Jan-Feb 2013) and must be dropped, not fail the page
+    val feats = out("energy_features")
+    val numeric = feats.schema.fields.collect {
+      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
+        f.name
+    }.toSeq
+    val corrs = Dashboard.topCorrelations(feats, "daily_energy_kwh", numeric)
+    assert(corrs.nonEmpty && !corrs.exists(_._1 == "year"), corrs)
+    val (c, r) = corrs.head
+    val xy = feats.select(col(c).cast("double"),
+      col("daily_energy_kwh").cast("double")).collect()
+      .map(row => (row.getDouble(0), row.getDouble(1)))
+    val (mx, my) = (xy.map(_._1).sum / xy.length, xy.map(_._2).sum / xy.length)
+    val sxy = xy.map { case (x, y) => (x - mx) * (y - my) }.sum
+    val sxx = xy.map { case (x, _) => (x - mx) * (x - mx) }.sum
+    val syy = xy.map { case (_, y) => (y - my) * (y - my) }.sum
+    assert(math.abs(r - sxy / math.sqrt(sxx * syy)) < 1e-9, s"$c: $r")
   }
 
   test("materialized run writes all stage tables + metadata (S6/S7/S14)") {

@@ -24,4 +24,21 @@ class QueriesSpec extends SparkSpec {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  test("StageMetrics: a Probe reading holds exactly its own query's work") {
+    val m = graft.tools.StageMetrics.attach(spark.sparkContext)
+    def probe() =
+      graft.tools.Probe.measure(spark, m, TestSpark.sf0001, "q_daily_agg")
+    try {
+      val a = probe()
+      assert(a.rows > 0 && a.m.jobs >= 1 && a.m.stages >= 1 &&
+        a.m.tasks >= 1 && a.m.cpuNs > 0, a.m.show)
+      assert(a.executedPlan.contains("isFinalPlan=true"), a.executedPlan)
+      val b = probe()
+      assert(b.m.stages >= 1 && b.stages.size == b.m.stages)
+      assert(b.m.cpuNs == b.stages.map(_.m.cpuNs).sum)
+      assert(b.stages.map(_.id).min > a.stages.map(_.id).max,
+        s"second reading's stages ${b.stages.map(_.id)} overlap the first's")
+    } finally spark.sparkContext.removeSparkListener(m)
+  }
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *
   * The ML family (`q_ml_*`) is covered too (its final transform/serve plan
   * — the training jobs `.fit` drives internally are separate jobs audited
-  * by MlSpec/ProfileMl). Its one nuance: `model.transform` injects Spark
+  * by MlSpec). Its one nuance: `model.transform` injects Spark
   * ML's OWN prediction ScalaUDFs (library internals we cannot
   * expression-ize without reimplementing the models), so the UDF lint
   * distinguishes authorship — a repo-authored (`graft.*`) ScalaUDF is
