@@ -21,10 +21,6 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = session(cpus)
-    // per-stage wall attribution for the corpus composition (the family
-    // whose wall time gets adjudicated round-over-round): forces each
-    // cached gate frame inside a PhaseTimer span — see Graft.phased
-    System.setProperty("graft.phases.corpus", "1")
     val acct = StageMetrics.attach(spark.sparkContext)
     // Host-load evidence: wall-clock on this box drifts ±20-60% under
     // external load (verify notes), so each pass brackets itself with
@@ -478,13 +474,11 @@ object Bench {
     val loadJson =
       s"""{"start":${jstr(loadStart)},"after_cold":${jstr(loadAfterCold)},"after_warm":${jstr(loadAfterWarm)},"quiet":$quiet,"max_load":$maxLoad,"wait_sec":${jnum(loadWaitSec)},"cold_start_load1":${jnum(l1)}}"""
     // operator-internal phase map (PhaseTimer): per-phase fit/transform
-    // seconds for the ML family PLUS the corpus composition's gate phases
-    // (corpus.* keys — sums across the corpusBuild-family queries and both
-    // passes), the axis that decides "variance or plan regression" without
-    // re-running anything. Concurrent phases accumulate their own thread's
-    // wall time (sums may exceed the fused wall clock — documented
-    // PhaseTimer semantics). Key stays "ml_phases" for round-over-round
-    // artifact continuity.
+    // seconds for the ML family (forecast.* and anomaly.* keys, summed
+    // over the run), the axis that decides "variance or plan
+    // regression" without re-running anything. Concurrent phases
+    // accumulate their own thread's wall time (sums may exceed the fused
+    // wall clock — documented PhaseTimer semantics).
     val mlPhases = graft.tools.PhaseTimer.snapshot.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + jnum(v) }
       .mkString("{", ",", "}")
@@ -557,8 +551,9 @@ object Bench {
   }
 
   /** The benchmark session: `local[cpus]` with one shuffle partition per
-    * core, AQE, UTC and [[SessionTuning]], then `confs`. Probe and
-    * PipelineScale build theirs here too, so their readings are Bench's.
+    * core, AQE, UTC and [[SessionTuning]], then `confs`. Verify, Smoke,
+    * Probe and PipelineScale build theirs here too, so every main runs
+    * the session Bench measures.
     */
   def session(cpus: String,
       confs: Seq[(String, String)] = Nil): SparkSession = {

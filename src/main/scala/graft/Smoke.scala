@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local equivalent of the driver's t1 smoke: run [[SparkEntry.entry]] and
   * assert rows > 0.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SessionTuning(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("4")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(10, truncate = false)

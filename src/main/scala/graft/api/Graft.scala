@@ -175,11 +175,12 @@ object Graft {
     * requires `dim % m == 0`, so a dim divisible by 4 but not 8 —
     * e.g. 12, 20, 36 — must pass `m = 4` explicitly to keep the old
     * behavior): the round-10 recall monitor diagnosed
-    * m=4's 2-byte codes as code-bound, and the round-11 RecallTune sweep
+    * m=4's 2-byte codes as code-bound, and the round-11 recall sweep
     * measured m=8 at +31–44% recall over m=4 for 2 extra bytes, with
     * m=16 approaching SQ8 recall at 1/8 its code size (SCALING.md
-    * recall-vs-(m, nProbe) table — the documented tuning loop when the
-    * `annRecall`-style monitor alerts).
+    * "Round 11: codebook training on a sample (trainFraction) + the PQ
+    * tuning loop", recall-vs-(m, nProbe) table — the documented tuning
+    * loop when the `annRecall`-style monitor alerts).
     */
   def annTopKIvfPq(vectors: DataFrame, idCol: String, vecCol: String,
                    k: Int, dim: Int, nProbe: Int = 2, m: Int = 8,
@@ -711,11 +712,11 @@ object Graft {
                   salt: String = "build", minTokens: Long = 10,
                   trainPct: Int = 80, alpha: Double = 0.5,
                   share: Double = 0.5, ctxTokens: Int = 256): DataFrame = {
-    val aDocs = phased("corpus.gate_gopher")(docs.join(
+    val aDocs = docs.join(
       TextAnalysis.gopherRules(docs, textCol, idCol,
           minTokens = minTokens)
         .filter(col("keep")).select(col(idCol)),
-      Seq(idCol), "left_semi").transform(CacheScope.cache))
+      Seq(idCol), "left_semi").transform(CacheScope.cache)
     val labeled = TextAnalysis.withTokenStats(aDocs, textCol)
       .withColumn("label_weak",
         round(TextAnalysis.qualityScore(col("n_tokens"),
@@ -724,15 +725,15 @@ object Graft {
       .select(col(idCol), col(textCol), col("label_weak"))
     val nbTrain = labeled
       .filter(Sampling.hashBucket(col(idCol), "graft") < trainPct)
-    val bDocs = phased("corpus.gate_nb")(aDocs.join(
+    val bDocs = aDocs.join(
       NbClassifier.trainScore(nbTrain, labeled, textCol, idCol,
           "label_weak")
         .filter(col("pred")).select(col(idCol)),
-      Seq(idCol), "left_semi").transform(CacheScope.cache))
-    val cDocs = phased("corpus.dedup")(bDocs.join(
+      Seq(idCol), "left_semi").transform(CacheScope.cache)
+    val cDocs = bDocs.join(
       Dedup.exactGroups(bDocs, textCol, idCol)
         .select(col("keeper_id").as(idCol)),
-      Seq(idCol), "left_semi").transform(CacheScope.cache))
+      Seq(idCol), "left_semi").transform(CacheScope.cache)
     val dDocs = Sampling.temperatureSampleWith(cDocs,
       Sampling.temperatureTargets(cDocs, groupCol, alpha = alpha,
         share = share),
@@ -743,23 +744,6 @@ object Graft {
       Packing.packByOffset(perDoc, Seq(groupCol), idCol, "n_tokens",
         ctxTokens = ctxTokens),
       Seq(groupCol), idCol, "n_tokens")
-  }
-
-  /** Opt-in per-stage timing for the corpus composition (the q_ml_*
-    * PhaseTimer discipline extended to the next-most-adjudicated family):
-    * with `-Dgraft.phases.corpus=1` (Bench sets it), each cached gate
-    * frame is force-materialized inside a [[graft.tools.PhaseTimer]]
-    * span — the downstream plan reads the cache either way, so the work
-    * attributed to a phase is work the composition pays regardless; the
-    * remaining mixture→encode→pack cost is the final action minus the
-    * phase sums. Without the property (the default for library users)
-    * the composition stays fully lazy. Phase sums accumulate across
-    * corpusBuild invocations in the process, exactly like the ML phases.
-    */
-  private def phased(name: String)(df: DataFrame): DataFrame = {
-    if (sys.props.get("graft.phases.corpus").contains("1"))
-      graft.tools.PhaseTimer.timed(name)(df.count())
-    df
   }
 
   /** [[corpusBuild]] that TRAINS its own tokenizer first — the
@@ -1726,9 +1710,10 @@ object Graft {
     * re-delivery count. EQUIVALENCE (ApiSpec, all three policies):
     * absorbing the same deltas over compacted vs full state emits
     * hash-identical shards and reaches the same live/digest/key sets;
-    * `DeltaScale … statecompact` proves the row-count bound at 500k
-    * docs. One windowed pass over the state, keyed by `keyCol` — run it
-    * on the loop's save cadence, exactly like the shard compaction.
+    * the row-count bound is measured at 500k docs in SCALING.md "Round
+    * 16: keeper-state retention at 500k docs". One windowed pass over
+    * the state, keyed by `keyCol` — run it on the loop's save cadence,
+    * exactly like the shard compaction.
     */
   def corpusRekeyedStateCompact(state: KeyedCorpusShardsState,
                                 keyCol: String,

@@ -255,9 +255,10 @@ object AnnIndex {
     * Worst case (candidates spread across the whole live uid span, or
     * a non-rangeable uid type mismatch) degrades to exactly the
     * pre-r18 cost — one parallel codes uid-column scan — never worse;
-    * the IndexScale `uidscan` probe measures the designed cases
-    * (out-of-span ids, clustered re-embeds) FLAT as the index grows
-    * 10× at fixed delta size.
+    * SCALING.md "Round 18: the served-uid membership probe goes
+    * delta-sized" measures the designed cases (out-of-span ids,
+    * clustered re-embeds) FLAT as the index grows 10× at fixed delta
+    * size.
     */
   private[graft] def servedUids(spark: SparkSession, root: String,
                                 candidates: DataFrame): DataFrame = {

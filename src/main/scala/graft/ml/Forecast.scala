@@ -207,8 +207,8 @@ object Forecast {
     evalAll(model, test, target, s"numTrees=${best._1},maxDepth=${best._2}")
   }
 
-  /** M6: GBT — present but disabled by default, mirroring the reference
-    * (`forecasting_model.py:428-476` skips it for memory); enable via flag.
+  /** M6: GBT — present but not part of [[run]]'s selection, mirroring the
+    * reference (`forecasting_model.py:428-476` skips it for memory).
     */
   def trainGbt(train: DataFrame, test: DataFrame, features: Array[String],
                target: String, maxIter: Int = 20): FitResult = {
@@ -257,15 +257,15 @@ object Forecast {
     *
     * - `fastGrid=true` trims LR to the 3-point dev grid and skips RF — the
     *   cheap loop for iterating; the DEFAULT is full reference parity.
-    * - `enableGbt` mirrors the reference's disabled GBT branch (M6).
+    * - GBT ([[trainGbt]]) stays out of the selection, as the reference's
+    *   GBT branch is disabled (M6).
     * - `modelDir` persists the winning PipelineModel
     *   (`best_forecasting_model/`, `model.write().overwrite().save`, ref
     *   `:424,525`) plus `model_metadata.txt` (ref `:560-570`).
     */
   def run(daily: DataFrame, idCol: String = "user_id",
           dateCol: String = "date", target: String = "daily_value",
-          fastGrid: Boolean = false, enableGbt: Boolean = false,
-          modelDir: Option[String] = None)
+          fastGrid: Boolean = false, modelDir: Option[String] = None)
       : (DataFrame, FitResult) = {
     val feats = computeFeatures(daily, idCol, dateCol, target).cache()
     // phase boundary: the cutoff collect below is the first action over
@@ -297,10 +297,7 @@ object Forecast {
             dateCol))) ++
       (if (fastGrid) Nil
        else Seq("RandomForest" -> (() =>
-         trainRandomForest(train, test, fcols, target, valCutoff, dateCol)))) ++
-      (if (enableGbt)
-         Seq("GBT" -> (() => trainGbt(train, test, fcols, target)))
-       else Nil)
+         trainRandomForest(train, test, fcols, target, valCutoff, dateCol))))
     // model families train concurrently too (independent jobs on the same
     // cached frames); selection order is the declared Seq order. Each
     // family's grid is phase-timed in its own thread — concurrent phases

@@ -46,14 +46,8 @@ object MlQueries {
       // and would leak the label into the features
       val base = daily(s, dir).select(col("user_id"), col("date"),
         col("daily_value"))
-      // run() returns preds already cached + materialized. GBT joins the
-      // LR/RF selection only behind the opt-in flag — the reference ships
-      // its GBT branch disabled (M6), so default-off IS parity; setting
-      // SPARK_GRAFT_GBT=1 adds the third family to the same best-by-test-
-      // RMSE selection (expect roughly +40% ml_fused bench time for the
-      // extra grid).
-      val (preds, _) = Forecast.run(base,
-        enableGbt = sys.env.get("SPARK_GRAFT_GBT").contains("1"))
+      // run() returns preds already cached + materialized
+      val (preds, _) = Forecast.run(base)
       preds
     }
 

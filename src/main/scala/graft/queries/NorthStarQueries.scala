@@ -1376,10 +1376,10 @@ object NorthStarQueries {
 
     // The SHIPPED facade default m=8 under the hash gate (VERDICT r11
     // item 4): every other oracled PQ query pins m=4, but the facade's
-    // PQ family defaults to m=8 since the RecallTune sweep (+31–44%
-    // recall for 2 extra code bytes) — this row runs the 8-subspace
-    // quantizer (dsub=8, eight sub-Lloyds) end-to-end against the same
-    // generalized sub-Lloyd CTE generator.
+    // PQ family defaults to m=8 since the round-11 recall sweep
+    // (SCALING.md: +31–44% recall for 2 extra code bytes) — this row runs
+    // the 8-subspace quantizer (dsub=8, eight sub-Lloyds) end-to-end
+    // against the same generalized sub-Lloyd CTE generator.
     "q_ann_pq_m8" -> ((s, dir) =>
       Similarity.pqTopK(Tables.embeddings(s, dir),
           "vec_id", "embedding", "label", k = 5, dim = 64, m = 8,

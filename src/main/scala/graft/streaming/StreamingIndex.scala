@@ -981,8 +981,9 @@ object StreamingIndex {
     * policy rebuild runs INSIDE the triggering micro-batch (the
     * single-writer rule leaves it nowhere else safe), stalling the
     * stream for the rebuild's duration — `maintainTrainFraction`
-    * subsamples its Lloyd training (the IndexScale probes run 0.1) to
-    * bound that stall at scale.
+    * subsamples its Lloyd training (the 200k-vector rows of SCALING.md
+    * "Round 11: trainFraction end-to-end" run 0.1) to bound that stall
+    * at scale.
     * Searches serve concurrently throughout ([[graft.ext.AnnIndex.search]]
     * takes no lock; it resolves the newest committed version per call).
     *

@@ -90,7 +90,7 @@ class ApiSpec extends SparkSpec {
     def autoK(n: Long): Long =
       math.min(4096L, math.max(16L, (n + 1023L) / 1024L))
     assert(autoK(2000L) == 16L)       // 1× fixture decade
-    assert(autoK(200000L) == 196L)    // the measured QuantScale corpus
+    assert(autoK(200000L) == 196L)    // the SCALING.md 200k-vector corpus
     assert(autoK(20000000L) == 4096L) // clamped at the measured k ceiling
   }
 
@@ -721,6 +721,14 @@ class ApiSpec extends SparkSpec {
       }
       assert(compact(cf).keepers.count() == cf.keepers.count(),
         s"$p: compaction is not idempotent")
+      // the retention bound: every kept row plus one row per key with no
+      // kept row, however many versions were re-delivered
+      val keptRows = f3.keepers.filter(col("kept")).count()
+      val deadKeys = f3.keepers.groupBy(col("ukey"))
+        .agg(max(col("kept").cast("int")).as("k"))
+        .filter(col("k") === 0).count()
+      assert(cf.keepers.count() == keptRows + deadKeys,
+        s"$p: compacted state is not (kept rows + keys with none kept)")
     }
   }
 

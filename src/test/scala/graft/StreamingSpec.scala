@@ -23,6 +23,11 @@ class StreamingSpec extends SparkSpec {
   private lazy val schema =
     spark.read.parquet(srcDir).schema
 
+  // total state rows after the last batch that reported state
+  private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.recentProgress.reverse.find(_.stateOperators.nonEmpty)
+      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
+
   test("streaming hourly agg matches the batch rollup") {
     val stream = StreamingEnergy.readStream(spark, srcDir, schema)
     val agg = StreamingEnergy.hourlyAgg(stream)
@@ -83,6 +88,8 @@ class StreamingSpec extends SparkSpec {
         assert(gotTot.join(batchTot, "user_id")
           .filter(gotTot("n") =!= batchTot("n") ||
             abs(gotTot("total") - batchTot("total")) > 1e-6).count() == 0)
+        assert(stateRows(totals) == batchTot.count(),
+          "running-totals state must hold one row per key")
       } finally { q.stop(); totals.stop() }
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -107,6 +114,9 @@ class StreamingSpec extends SparkSpec {
         .filter(got("n") =!= batch("n") ||
           abs(got("total") - batch("total")) > 1e-6).count()
       assert(bad == 0)
+      // state is bounded by the key count, not by the readings
+      assert(stateRows(q) == batch.count(),
+        "running-totals state must hold one row per key")
     } finally q.stop()
   }
 
