@@ -10,6 +10,19 @@ class QueriesSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("runOrder: every query once, q_ml_* last, only the first q_ml_* clears") {
+    assert(SparkEntry.runOrder(Seq("q_ml_b", "q_z", "q_ml_a", "q_a")) ==
+      Seq("q_a" -> true, "q_z" -> true, "q_ml_a" -> true, "q_ml_b" -> false))
+    val names = SparkEntry.queries.keys.toSeq
+    val order = SparkEntry.runOrder(names)
+    assert(order.map(_._1).sorted == names.sorted)
+    val firstMl = order.indexWhere(_._1.startsWith("q_ml_"))
+    assert(firstMl > 0 && order.drop(firstMl).forall(_._1.startsWith("q_ml_")))
+    order.zipWithIndex.foreach { case ((name, clear), i) =>
+      assert(clear == (!name.startsWith("q_ml_") || i == firstMl), name)
+    }
+  }
+
   test("entry returns rows (t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
