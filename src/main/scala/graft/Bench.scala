@@ -4,8 +4,7 @@ import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Verify.q
 import graft.tools.{PhaseTimer, Probe, StageMetrics}
 
 /** Benchmark main: times every [[SparkEntry]] query against
@@ -36,9 +35,8 @@ import graft.tools.{PhaseTimer, Probe, StageMetrics}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = session(cpus)
+    val spark = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Engine.session())(c => Engine.session(c.toInt))
     val acct = StageMetrics.attach(spark.sparkContext)
     val errors = mutable.LinkedHashMap.empty[String, String]
     def describe(e: Throwable): String = s"${e.getClass.getSimpleName}: " +
@@ -117,25 +115,20 @@ object Bench {
       graft.ext.Dedup.minHashSignatures(
         graft.io.Tables.documents(spark, sfDir), "text", "doc_id").count()
     }
-    def jstr(s: String) =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .map(c => if (c < 0x20) ' ' else c) + "\"" // ALL control chars — one
-        // raw \b or \f in an error message would make the result line
-        // unparseable exactly when there is a failure to report
     def jnum(v: Double) = BigDecimal(v).setScale(3,
       BigDecimal.RoundingMode.HALF_UP).toString
     def jobj(kvs: Iterable[(String, String)]) =
-      kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+      kvs.map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
     // itemize at most 3 errors with trimmed messages — error text must
     // never push the result line past the harness tail window (that would
     // lose the report exactly when there are failures to report); the full
     // messages land in BENCH_DETAIL.json
     val errJson = errors.take(3)
-      .map { case (k, v) => jstr(k) + ":" + jstr(v.take(80)) }
+      .map { case (k, v) => q(k) + ":" + q(v.take(80)) }
       .mkString("{", ",",
         (if (errors.size > 3) s""","more_errors":${errors.size - 3}""" else
           "") + "}")
-    val errJsonFull = jobj(errors.map { case (k, v) => k -> jstr(v) })
+    val errJsonFull = jobj(errors.map { case (k, v) => k -> q(v) })
     val mlFused = cold.collect {
       case (n, r) if n.startsWith("q_ml_") => r.wallSec
     }.sum
@@ -152,7 +145,7 @@ object Bench {
     // complete full-precision map (plus per-query shuffle/spill MB from the
     // stage-metrics listener) to BENCH_DETAIL.json alongside.
     val (top, rest) = cold.sortBy(-_._2.wallSec).splitAt(40)
-    val qs = top.map { case (k, r) => jstr(k) + ":" + jnum(r.wallSec) }
+    val qs = top.map { case (k, r) => q(k) + ":" + jnum(r.wallSec) }
       .mkString("{", ",",
         s""","other_n":${rest.size},"other_sec":${jnum(rest.map(_._2.wallSec).sum)}}""")
     val fullQs = jobj(cold.map { case (k, r) => k -> r.wallSec.toString })
@@ -204,22 +197,4 @@ object Bench {
     if (errors.nonEmpty) sys.exit(1)
   }
 
-  /** The benchmark session: `local[cpus]` with one shuffle partition per
-    * core, AQE, UTC and [[SessionTuning]], then `confs`. Verify, Smoke,
-    * Probe and PipelineScale build theirs here too, so every main runs
-    * the session Bench measures.
-    */
-  def session(cpus: String,
-      confs: Seq[(String, String)] = Nil): SparkSession = {
-    val spark = confs.foldLeft(SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))) { case (b, (k, v)) =>
-      b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -16,29 +16,46 @@ import graft.plans.GraftExtensions
   */
 object Engine {
 
-  /** Session tuned per the 100 TB posture (AQE on, shuffle partitions =
-    * cores for local mode, UTC) with [[GraftExtensions]] installed.
+  /** The one session builder: library users, perfbench, Bench, Verify,
+    * Smoke, the tools and the tests all run this session. `local[cpus]`
+    * with one shuffle partition per core, UTC, UI off, WARN logging and
+    * [[GraftExtensions]], then `confs` (applied last, so they win).
+    *
+    * `canChangeCachedPlanOutputPartitioning=true`: upstream Spark disables
+    * AQE partition coalescing for any plan that feeds a `.cache()` (to keep
+    * cached partitionings static), so every CacheScope'd intermediate
+    * materializes at the static `spark.sql.shuffle.partitions` — at 32
+    * cores that is 32 near-empty partitions per cached frame, and each task
+    * re-deserializes the ~1 MB task binary (the "Broadcasting large task
+    * binary" warnings), burning ~50-90 ms of fixed CPU per task. Measured
+    * at sf0.1/local[32] (cold executor-CPU, conf off vs on):
+    * q_rolling_actives 9.7→0.85 cpu-s (133→9 tasks), q_pagerank3
+    * 81.8→30.9 (558→185), q_copurchase_degree 44.6→13.6 (203→56) — each
+    * landing on its 8-core CPU reading, i.e. the 32-core CPU inflation was
+    * exactly this per-task fixed cost. At real scale the same conf sizes
+    * cached-plan partitions by AQE's byte targets instead of a static
+    * partition count ("fewer, larger reduce partitions"); coalesced hash
+    * partitioning still satisfies downstream clustering (q_pagerank3 keeps
+    * zero per-iteration edge exchanges). It changes partitioning, never
+    * results.
     */
-  def session(master: String =
-                s"local[${Runtime.getRuntime.availableProcessors()}]",
-              shufflePartitions: Option[Int] = None): SparkSession = {
-    val parts = shufflePartitions.getOrElse(
-      Runtime.getRuntime.availableProcessors())
-    val s = SessionTuning(SparkSession.builder()
-      .master(master)
+  def session(cpus: Int = Runtime.getRuntime.availableProcessors(),
+      confs: Seq[(String, String)] = Nil): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
       .appName("graft")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.adaptive.enabled", "true"))
-      // runtime bloom-filter join pruning: at fact-dim scale a bloom built
-      // from the filtered dim side prunes fact rows BEFORE the shuffle —
-      // semantics-preserving, so correctness gates are unaffected
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(confs.toMap)
       .getOrCreate()
-    GraftExtensions.ensureRegistered(s) // getOrCreate may reuse a session
-    s
+    spark.sparkContext.setLogLevel("WARN")
+    // the one install route: getOrCreate may return an existing session,
+    // where `withExtensions` would be ignored
+    GraftExtensions.ensureRegistered(spark)
+    spark
   }
 
   /** SQL scalar UDFs (Spark 4 `CREATE FUNCTION … RETURN expr`) mirroring

@@ -5,7 +5,7 @@ package graft
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Bench.session("4")
+    val spark = Engine.session(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(10, truncate = false)

@@ -19,10 +19,9 @@ object Dashboard {
   /** Consumption-patterns page: weekday + monthly profiles (A6/A7). */
   def patterns(daily: DataFrame, dateCol: String, valueCol: String)
       : (Array[Row], Array[Row]) = {
-    val byWeekday = daily
-      .withColumn("weekday", date_format(col(dateCol), "E"))
-      .groupBy("weekday").agg(avg(col(valueCol)).as("mean_value"))
-      .collect()
+    val byWeekday = Queries.groupMean(
+      daily.withColumn("weekday", date_format(col(dateCol), "E")),
+      "weekday", valueCol).collect()
     val byMonth = Queries.monthlyTrend(daily, dateCol, valueCol)
       .orderBy("month_start").collect()
     (byWeekday, byMonth)

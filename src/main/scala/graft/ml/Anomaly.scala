@@ -50,10 +50,10 @@ object Anomaly {
     // scheduling-overhead lever as the tree grids (Forecast.sizedForTrees'
     // measured A/B); the TRANSFORM runs on the cached input itself, so
     // downstream partitioning is whatever AQE sized that cache to (never
-    // a fixed 32 since SessionTuning). Cluster floats legitimately
-    // vary with fit partitioning (init sampling) — the verification
-    // contract pins metric invariants and the oracled key envelope, never
-    // cluster-float hashes.
+    // a fixed 32: Engine.session lets AQE coalesce cached plans). Cluster
+    // floats legitimately vary with fit partitioning (init sampling) — the
+    // verification contract pins metric invariants and the oracled key
+    // envelope, never cluster-float hashes.
     val input = df.cache()
     // the three estimator phases run exactly as Pipeline.fit would chain
     // them (assemble → scaler fit/transform → kmeans fit on the scaled

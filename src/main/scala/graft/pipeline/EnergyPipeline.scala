@@ -133,14 +133,4 @@ object EnergyPipeline {
     }
     out
   }
-
-  /** S14: key:value metadata text sink (`forecasting_model.py:561-571`).
-    * Goes through the Hadoop FileSystem API so the file lands next to the
-    * tables for ANY outDir scheme (local, hdfs://, s3a://…) — local
-    * java.nio would silently write a URI-shaped local path.
-    */
-  def writeMetadata(spark: SparkSession, path: String,
-                    kv: Map[String, String]): Unit =
-    Writers.textFile(spark, path,
-      kv.map { case (k, v) => s"$k: $v" }.mkString("\n"))
 }

@@ -32,18 +32,17 @@ object GraftExtensions {
       (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))
         : Expression))
 
-  /** Register directly on an EXISTING session — `getOrCreate` silently
-    * ignores `withExtensions` when it returns a pre-existing session, so
-    * [[graft.Engine.session]] calls this to make registration
-    * unconditional.
+  /** Register directly on a session, new or existing — `getOrCreate`
+    * silently ignores `withExtensions` when it returns a pre-existing
+    * session, so [[graft.Engine.session]] installs graft this way only,
+    * and each session gets the [[SpreadGenerate]] rule once. Idempotent.
     */
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
-    // injectOptimizerRule only applies at session CREATION; a reused
-    // session gets the (still conf-gated) rule via the public
-    // experimental-optimizations hook instead
+    // the public experimental-optimizations hook takes effect on a live
+    // session (still conf-gated), where injectOptimizerRule would not
     if (!spark.experimental.extraOptimizations
         .exists(_.isInstanceOf[SpreadGenerate]))
       spark.experimental.extraOptimizations =

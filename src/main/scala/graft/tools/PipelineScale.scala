@@ -21,7 +21,7 @@ import graft.pipeline.EnergyPipeline
   * slot + per-household component; one "Null" sentinel per day; same
   * shape as the spec fixture, parameterized) and generated DISTRIBUTED —
   * households × days × 48 rows never assemble on the driver. The session
-  * is Bench's, on every core.
+  * is [[graft.Engine.session]], on every core.
   */
 object PipelineScale {
 
@@ -29,8 +29,7 @@ object PipelineScale {
     val Array(workDir, hhStr, daysStr) = args.take(3)
     val households = hhStr.toInt
     val days = daysStr.toInt
-    val spark = graft.Bench.session(
-      Runtime.getRuntime.availableProcessors().toString)
+    val spark = graft.Engine.session()
     val acct = StageMetrics.attach(spark.sparkContext)
 
     // --- deterministic half-hourly CSV, generated distributed ---

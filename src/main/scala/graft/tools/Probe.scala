@@ -4,9 +4,10 @@ import scala.annotation.tailrec
 
 import org.apache.spark.sql.SparkSession
 
-import graft.{Bench, SparkEntry}
+import graft.{Engine, SparkEntry}
 
-/** Measure named [[graft.SparkEntry]] queries in a Bench session:
+/** Measure named [[graft.SparkEntry]] queries in the session Bench
+  * measures, [[graft.Engine.session]]:
   *
   *   Probe --sf DIR [--cpus N] [--conf k=v]... QUERY...
   *
@@ -15,7 +16,7 @@ import graft.{Bench, SparkEntry}
   * [[StageMetrics]] window (executor CPU, jobs, stages, tasks, shuffle
   * read/write, spill); then the cold pass's stages ranked by CPU and its
   * final post-AQE executed plan. `--cpus` defaults to the core count;
-  * `--conf` settings go on the session after Bench's own.
+  * `--conf` settings are applied last.
   */
 object Probe {
   private val Usage =
@@ -42,7 +43,7 @@ object Probe {
   }
 
   private final case class Args(sf: Option[String] = None,
-      cpus: String = Runtime.getRuntime.availableProcessors().toString,
+      cpus: Int = Runtime.getRuntime.availableProcessors(),
       confs: Vector[(String, String)] = Vector.empty,
       queries: Vector[String] = Vector.empty)
 
@@ -50,7 +51,7 @@ object Probe {
     case Nil => o
     case "--sf" :: d :: t => parse(t, o.copy(sf = Some(d)))
     case "--cpus" :: n :: t if n.toIntOption.exists(_ > 0) =>
-      parse(t, o.copy(cpus = n))
+      parse(t, o.copy(cpus = n.toInt))
     case "--conf" :: kv :: t if kv.contains('=') =>
       val Array(k, v) = kv.split("=", 2)
       parse(t, o.copy(confs = o.confs :+ (k -> v)))
@@ -67,7 +68,7 @@ object Probe {
       case Some(d) if a.queries.nonEmpty => d
       case _ => System.err.println(Usage); sys.exit(2)
     }
-    val spark = Bench.session(a.cpus, a.confs)
+    val spark = Engine.session(a.cpus, a.confs)
     val metrics = StageMetrics.attach(spark.sparkContext)
     SparkEntry.entry(spark).count()
     println(s"[probe] local[${a.cpus}] sf=$sf confs=" +

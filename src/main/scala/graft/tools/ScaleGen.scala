@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize an N× scale-up of a testdata directory by
@@ -48,12 +48,8 @@ object ScaleGen {
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).toSet)
     def want(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Engine.session(
+      confs = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 
     def raw(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,65 +1,77 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** SQL-first usage through [[Engine]]: views + the graft_dot extension
-  * resolve inside plain spark.sql.
+  * resolve inside plain spark.sql, on the one engine session.
   */
 class EngineSpec extends SparkSpec {
 
+  test("the shared test session is Engine.session: extension + AQE conf") {
+    assert(spark.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")))
+    assert(spark.conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+  }
+
   test("graft_dot resolves in SQL through the session extension") {
-    // the shared test session lacks the extension; build one with it
-    val s = Engine.session(master = "local[2]", shufflePartitions = Some(2))
-    try {
-      Engine.registerTables(s, TestSpark.sf0001)
-      val row = s.sql(
-        """SELECT a.vec_id, b.vec_id,
-          |  graft_dot(a.embedding_d, b.embedding_d) AS dot
-          |FROM embeddings a JOIN embeddings b
-          |  ON a.vec_id = 0 AND b.vec_id = 1""".stripMargin).head()
-      assert(!row.isNullAt(2) && math.abs(row.getDouble(2)) < 1.5)
-      // relational SQL over the registered views
-      val n = s.sql(
-        """SELECT count(*) FROM events e JOIN customer c
-          |  ON e.user_id = c.c_custkey""".stripMargin).head().getLong(0)
-      assert(n > 0)
-      // fused cosine == dot of pre-normalized vectors (same pair)
-      val cosRow = s.sql(
-        """SELECT graft_cosine(a.embedding_d, b.embedding_d) AS c
-          |FROM embeddings a JOIN embeddings b
-          |  ON a.vec_id = 0 AND b.vec_id = 1""".stripMargin).head()
-      import org.apache.spark.sql.functions.col
-      val viaUnit = graft.ext.Similarity.bruteForceTopK(
-        s.table("embeddings").filter(col("vec_id") === 0),
-        s.table("embeddings").filter(col("vec_id") === 1),
-        "vec_id", "embedding", k = 1).head().getAs[Double]("cosine")
-      assert(math.abs(cosRow.getDouble(0) - viaUnit) < 1e-5)
-    } finally {
-      // shared TestSpark.spark must remain the active default session for
-      // the other suites
-      org.apache.spark.sql.SparkSession.setDefaultSession(TestSpark.spark)
-      org.apache.spark.sql.SparkSession.setActiveSession(TestSpark.spark)
-    }
+    Engine.registerTables(spark, TestSpark.sf0001)
+    val row = spark.sql(
+      """SELECT a.vec_id, b.vec_id,
+        |  graft_dot(a.embedding_d, b.embedding_d) AS dot
+        |FROM embeddings a JOIN embeddings b
+        |  ON a.vec_id = 0 AND b.vec_id = 1""".stripMargin).head()
+    assert(!row.isNullAt(2) && math.abs(row.getDouble(2)) < 1.5)
+    // relational SQL over the registered views
+    val n = spark.sql(
+      """SELECT count(*) FROM events e JOIN customer c
+        |  ON e.user_id = c.c_custkey""".stripMargin).head().getLong(0)
+    assert(n > 0)
+    // fused cosine == dot of pre-normalized vectors (same pair)
+    val cosRow = spark.sql(
+      """SELECT graft_cosine(a.embedding_d, b.embedding_d) AS c
+        |FROM embeddings a JOIN embeddings b
+        |  ON a.vec_id = 0 AND b.vec_id = 1""".stripMargin).head()
+    import org.apache.spark.sql.functions.col
+    val viaUnit = graft.ext.Similarity.bruteForceTopK(
+      spark.table("embeddings").filter(col("vec_id") === 0),
+      spark.table("embeddings").filter(col("vec_id") === 1),
+      "vec_id", "embedding", k = 1).head().getAs[Double]("cosine")
+    assert(math.abs(cosRow.getDouble(0) - viaUnit) < 1e-5)
   }
 
   test("SQL UDF graft_bucket matches the Column-API hash bucket") {
-    val s = Engine.session(master = "local[2]", shufflePartitions = Some(2))
-    try {
-      Engine.registerSqlFunctions(s)
-      import s.implicits._
-      val ids = (1L to 50L).toDF("id")
-      ids.createOrReplaceTempView("ids_sqludf")
-      val viaSql = s.sql(
-        "SELECT id, graft_bucket(id, 'graft') AS b FROM ids_sqludf")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaCol = ids.select($"id",
-        graft.ext.Sampling.hashBucket($"id", "graft").as("b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaSql == viaCol)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(TestSpark.spark)
-      org.apache.spark.sql.SparkSession.setActiveSession(TestSpark.spark)
-    }
+    Engine.registerSqlFunctions(spark)
+    import spark.implicits._
+    val ids = (1L to 50L).toDF("id")
+    ids.createOrReplaceTempView("ids_sqludf")
+    val viaSql = spark.sql(
+      "SELECT id, graft_bucket(id, 'graft') AS b FROM ids_sqludf")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaCol = ids.select($"id",
+      graft.ext.Sampling.hashBucket($"id", "graft").as("b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaSql == viaCol)
   }
 
+  test("no session builder in src/main outside Engine.scala") {
+    // Spark-free: one session builder keeps every main, tool and test on
+    // the session the benchmark measures. Comments are ignored.
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Engine.scala")
+      .filter { p =>
+        builder.findFirstIn(Files.readString(p)
+          .replaceAll("(?s)/\\*.*?\\*/", "")
+          .replaceAll("//[^\n]*", "")).nonEmpty
+      }.toList
+    assert(offenders.isEmpty, s"session builders outside Engine: $offenders")
+  }
 
   test("Observation attaches zero-cost metrics to a query in flight") {
     import org.apache.spark.sql.Observation

@@ -3,19 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session). */
+/** Shared local session for all suites (one JVM, one session): the
+  * engine's own session, so the tests check what Bench and Verify run.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SessionTuning(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Engine.session(4)
   val sf0001 = "/root/testdata/sf0.001"
 }
 

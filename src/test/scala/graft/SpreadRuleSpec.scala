@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
-
 /** The SpreadGenerate optimizer rule: SQL-first explode over an
   * under-split scan gets a repartition injected — and only when opted in.
   */
@@ -19,7 +17,6 @@ class SpreadRuleSpec extends SparkSpec {
   }
 
   test("opt-in rule widens an explode over a single-split scan") {
-    GraftExtensions.ensureRegistered(spark)
     val key = "spark.graft.spread.enabled"
     try {
       spark.conf.set(key, "true")
@@ -30,7 +27,6 @@ class SpreadRuleSpec extends SparkSpec {
   }
 
   test("rule is inert without the flag and idempotent with it") {
-    GraftExtensions.ensureRegistered(spark)
     val off = explodePlan()
     assert(!off.contains("Exchange RoundRobinPartitioning"),
       s"rule fired without opt-in:\n$off")
@@ -38,8 +34,8 @@ class SpreadRuleSpec extends SparkSpec {
     try {
       spark.conf.set(key, "true")
       val on = explodePlan()
-      // exactly ONE injected exchange even though the rule runs in both the
-      // session-extension batch and experimental.extraOptimizations
+      // exactly ONE injected exchange: the rule runs to a fixed point and
+      // the session holds it once
       assert(on.linesIterator
         .count(_.contains("Exchange RoundRobinPartitioning")) == 1,
         s"expected exactly one injected repartition:\n$on")
@@ -47,7 +43,6 @@ class SpreadRuleSpec extends SparkSpec {
   }
 
   test("rule never fires beneath an existing shuffle") {
-    GraftExtensions.ensureRegistered(spark)
     val key = "spark.graft.spread.enabled"
     try {
       spark.conf.set(key, "true")
