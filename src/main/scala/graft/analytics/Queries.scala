@@ -70,13 +70,4 @@ object Queries {
       .groupBy(col("p.feature").as("feature"))
       .agg(try_divide(covar_samp(x, y), stddev_samp(x) * stddev_samp(y)).as("r"))
   }
-
-  /** A11: per-cluster profile (`streamlit_app.py:694`). */
-  def clusterProfile(df: DataFrame, clusterCol: String,
-                     valueCols: Seq[String]): DataFrame = {
-    val aggs = valueCols.flatMap { c =>
-      Seq(avg(col(c)).as(s"${c}_mean"), stddev(col(c)).as(s"${c}_std"))
-    } :+ count(lit(1)).as("n")
-    df.groupBy(col(clusterCol)).agg(aggs.head, aggs.tail: _*)
-  }
 }

@@ -113,13 +113,20 @@ object AsOfJoin {
     * sharing `keys`. Composed as an equi-join on keys + interval predicate;
     * Catalyst evaluates the range predicate post-join, and the equi-key
     * keeps the shuffle bounded (never a cross product).
+    *
+    * The two sides are aliased and their columns named through the
+    * aliases: when both derive from one frame, `left(k) === right(k)`
+    * would compare one attribute with itself (a trivially true predicate
+    * that only Spark's self-join rewrite rescues).
     */
   def rangeJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                 leftTime: String, start: String, end: String,
                 how: String = "inner"): DataFrame = {
-    val cond = keys.map(k => left(k) === right(k)).reduce(_ && _) &&
-      left(leftTime) >= right(start) && left(leftTime) < right(end)
-    val joined = left.join(right, cond, how)
-    keys.foldLeft(joined)((d, k) => d.drop(right(k)))
+    def l(c: String) = col(s"__l.`${c.replace("`", "``")}`")
+    def r(c: String) = col(s"__r.`${c.replace("`", "``")}`")
+    val cond = keys.map(k => l(k) === r(k)).reduce(_ && _) &&
+      l(leftTime) >= r(start) && l(leftTime) < r(end)
+    val joined = left.as("__l").join(right.as("__r"), cond, how)
+    keys.foldLeft(joined)((d, k) => d.drop(r(k)))
   }
 }

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.types.StructType
 
@@ -22,7 +23,25 @@ object Sources {
     */
   def csv(spark: SparkSession, path: String, schema: StructType,
           header: Boolean = true): DataFrame =
-    spark.read.option("header", header.toString).schema(schema).csv(path)
+    spark.read.option("header", header.toString).schema(schema)
+      .csv(expandGlob(spark, path): _*)
+
+  /** The paths a glob such as `csv/block_*.csv` matches (Spark expands
+    * it to the same paths), or `path` itself when it matches nothing, so
+    * the read still fails with "Path does not exist". Handed one glob,
+    * Spark looks for a streaming sink's `_spark_metadata` under it and
+    * logs a `FileNotFoundException` stack trace on every read. Spark globs
+    * each path it is handed again, so a match's own glob characters (as in
+    * `block_[1].csv`) are escaped to stand for themselves.
+    */
+  private def expandGlob(spark: SparkSession, path: String): Seq[String] = {
+    val p = new Path(path)
+    val matched = Option(p.getFileSystem(spark.sessionState.newHadoopConf())
+      .globStatus(p)).getOrElse(Array.empty)
+    if (matched.isEmpty) Seq(path)
+    else matched.map(_.getPath.toString.replaceAll("""([{}\[\]*?\\])""",
+      """\\$1""")).toSeq
+  }
 
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

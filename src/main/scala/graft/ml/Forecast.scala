@@ -2,9 +2,12 @@ package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
-import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-import org.apache.spark.ml.regression.{LinearRegression, RandomForestRegressor}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.optim.graft.LinearBridge
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.regression.RandomForestRegressor
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -17,6 +20,21 @@ import graft.feat.Windows
   * (chronological inner split, NOT CrossValidator — the reference replaced
   * CV to avoid temporal leakage, `forecasting_model.py:260-320`), best-model
   * selection by validation RMSE, refit on full train, test metrics.
+  *
+  * The LR family is fit from sufficient statistics. One pass over the
+  * cached features sums the Gram matrix of `[1, x, y]` per date
+  * ([[LinearGram.byKey]]); the folds are sums of dates. The scaler, every
+  * grid point's solve (MLlib's own Cholesky and quasi-Newton solvers),
+  * each validation RMSE, the refit and the test RMSE and R² are then
+  * local arithmetic on p+2 square matrices, with no Spark job, and the
+  * model is MLlib's `PipelineModel(assembler, scaler, lr)`. MLlib's
+  * `LinearRegression` instead aggregates the same rows once per grid
+  * point, plus one evaluation job each: on MlSpec's fixture
+  * `run(fastGrid = true)` took 30 jobs that way, and takes 5 now. The
+  * pass is one `treeAggregate` of packed triangles rather than one SQL
+  * `sum` per Gram entry, because the 325-column SQL aggregate measured
+  * 1.1–1.8 s (2 jobs) against 0.05–0.07 s (1 job) on the perfbench input
+  * (details at [[LinearGram.byKey]]).
   */
 object Forecast {
 
@@ -109,42 +127,80 @@ object Forecast {
     r
   }
 
-  /** M3+M4: LR over a manual grid, selected on a chronological validation
-    * split, refit on full train.
+  /** Mean |target − prediction| in one job: an RDD mean has no shuffle
+    * stage, where a SQL aggregate adds one. NaN over no rows.
     */
-  def trainLinearRegression(train: DataFrame, test: DataFrame,
-                            features: Array[String], target: String,
-                            valCutoff: String, dateCol: String = "date",
-                            grid: Seq[(Double, Double)] =
-                              for {r <- Seq(0.01, 0.1, 1.0); e <- Seq(0.0, 0.5, 1.0)}
-                                yield (r, e)): FitResult = {
-    val assembler = new VectorAssembler().setInputCols(features)
+  private def mae(pred: DataFrame, target: String): Double =
+    pred.select(abs(col(target) - col("prediction")).cast("double"))
+      .as(Encoders.scalaDouble).rdd.mean()
+
+  private def assembler(features: Array[String]) =
+    new VectorAssembler().setInputCols(features)
       .setOutputCol("features").setHandleInvalid("skip")
-    val scaler = new StandardScaler().setInputCol("features")
-      .setOutputCol("scaled_features")
-    // assembler+scaler depend only on innerTrain, not on the grid point —
-    // fit them ONCE and grid over the bare LR on the pre-transformed
-    // frames. Identical selection to refitting the whole pipeline per
-    // config (the reference's shape), at a third of the fit work.
-    val innerTrain = train.filter(col(dateCol) < lit(valCutoff))
-    val innerVal = train.filter(col(dateCol) >= lit(valCutoff))
-    val prep = new Pipeline().setStages(Array(assembler, scaler)).fit(innerTrain)
-    val prepTrain = prep.transform(innerTrain).cache()
-    val prepVal = prep.transform(innerVal).cache()
-    val best = parGrid(grid) { case (reg, en) =>
-      val lr = new LinearRegression().setFeaturesCol("scaled_features")
-        .setLabelCol(target).setMaxIter(100)
-        .setRegParam(reg).setElasticNetParam(en)
-      val m = lr.fit(prepTrain)
-      val vr = evaluator("rmse", target).evaluate(m.transform(prepVal))
-      (reg, en, vr)
-    }.minBy(_._3)
-    prepTrain.unpersist(); prepVal.unpersist()
-    val lr = new LinearRegression().setFeaturesCol("scaled_features")
-      .setLabelCol(target).setMaxIter(100)
-      .setRegParam(best._1).setElasticNetParam(best._2)
-    val model = new Pipeline().setStages(Array(assembler, scaler, lr)).fit(train)
-    evalAll(model, test, target, s"regParam=${best._1},elasticNet=${best._2}")
+
+  /** The reference's LR grid: regParam {0.01,0.1,1.0} × elasticNet
+    * {0,0.5,1} (`forecasting_model.py:272-320`).
+    */
+  val ReferenceLrGrid: Seq[(Double, Double)] =
+    for {r <- Seq(0.01, 0.1, 1.0); e <- Seq(0.0, 0.5, 1.0)} yield (r, e)
+
+  /** The reference's trimmed dev grid. */
+  val FastLrGrid: Seq[(Double, Double)] =
+    Seq((0.01, 0.0), (0.1, 0.0), (0.1, 0.5))
+
+  /** The chronological split over the epoch days `days`: the validation
+    * cutoff at 50 % and the test cutoff at 70 % of their span.
+    */
+  def cutoffDays(days: Iterable[Int]): (Int, Int) = {
+    val (first, span) = (days.min, days.max - days.min)
+    (first + span * 5 / 10, first + span * 7 / 10)
+  }
+
+  /** M3+M4: LR over a manual grid, selected on a chronological validation
+    * split, refit on full train: MLlib's assembler → scaler →
+    * `LinearRegression` pipeline, fit from the per-date Grams of the
+    * features ([[LinearGram.byKey]] keyed by epoch day) with no Spark job.
+    * Days before `valDay` are inner-train, days from `valDay` to before
+    * `testDay` inner-val, the rest test. The scaler is fit on inner-train,
+    * then one solve per grid point, selection by validation RMSE, the
+    * refit of scaler and LR on inner-train + inner-val, and test RMSE and
+    * R². MAE needs the test rows, so it is NaN here; [[run]] measures it
+    * in its predictions pass.
+    */
+  def trainLinearRegression(byDate: Map[Int, Gram], valDay: Int,
+                            testDay: Int, features: Array[String],
+                            target: String,
+                            grid: Seq[(Double, Double)] = ReferenceLrGrid)
+      : FitResult = {
+    def fold(in: Int => Boolean) = byDate.keys.filter(in).toSeq.sorted
+      .foldLeft(LinearGram.empty(features.length))(_ + byDate(_))
+    val innerTrain = fold(_ < valDay)
+    val innerVal = fold(d => d >= valDay && d < testDay)
+    val test = fold(_ >= testDay)
+    // prediction = coef · (x * scale) + intercept, so the residual's
+    // weights on the raw features are coef * scale
+    def weights(c: Array[Double], s: Array[Double]) =
+      Array.tabulate(c.length)(i => c(i) * s(i))
+    val innerScale = LinearGram.scale(LinearGram.scaler(innerTrain)._1)
+    val (reg, en) = grid.minBy { case (r, e) =>
+      val (c, b) = LinearGram.fit(innerTrain, innerScale, r, e)
+      math.sqrt(innerVal.sse(weights(c, innerScale), b) / innerVal.n)
+    }
+    val train = innerTrain + innerVal
+    val (std, mean) = LinearGram.scaler(train)
+    val scale = LinearGram.scale(std)
+    val (coef, intercept) = LinearGram.fit(train, scale, reg, en)
+    val sse = test.sse(weights(coef, scale), intercept)
+    val lr = LinearBridge.linearModel(Vectors.dense(coef).compressed, intercept)
+    val scaler = LinearBridge.scalerModel(Vectors.dense(std).compressed,
+      Vectors.dense(mean).compressed)
+      .setInputCol("features").setOutputCol("scaled_features")
+    val model = LinearBridge.pipelineModel(Array(assembler(features), scaler,
+      lr.copy(ParamMap(lr.featuresCol -> "scaled_features",
+        lr.labelCol -> target, lr.maxIter -> LinearGram.MaxIter,
+        lr.regParam -> reg, lr.elasticNetParam -> en))))
+    FitResult(model, math.sqrt(sse / test.n), Double.NaN,
+      1 - sse / test.centeredYY, s"regParam=$reg,elasticNet=$en")
   }
 
   /** Partition-sizing for tree-ensemble fits: tree training is iterative
@@ -180,11 +236,10 @@ object Forecast {
                         grid: Seq[(Int, Int)] =
                           for {t <- Seq(50, 100); d <- Seq(5, 10)} yield (t, d))
       : FitResult = {
-    val assembler = new VectorAssembler().setInputCols(features)
-      .setOutputCol("features").setHandleInvalid("skip")
+    val assembler = Forecast.assembler(features)
     // assembler is a pure Transformer — assemble the inner frames ONCE and
-    // grid over the bare RF (same trick as the LR grid: identical
-    // selection, no per-config re-assembly)
+    // grid over the bare RF: identical selection, no per-config
+    // re-assembly
     // cache BEFORE sizedForTrees: its count() then populates the cache, and
     // the coalesced view reads through it — uncached, the filter+assembly
     // lineage would execute twice (once for the count, again on first fit)
@@ -212,12 +267,10 @@ object Forecast {
     */
   def trainGbt(train: DataFrame, test: DataFrame, features: Array[String],
                target: String, maxIter: Int = 20): FitResult = {
-    val assembler = new VectorAssembler().setInputCols(features)
-      .setOutputCol("features").setHandleInvalid("skip")
     val gbt = new org.apache.spark.ml.regression.GBTRegressor()
       .setFeaturesCol("features").setLabelCol(target)
       .setMaxIter(maxIter).setSeed(42)
-    val model = new Pipeline().setStages(Array(assembler, gbt))
+    val model = new Pipeline().setStages(Array(assembler(features), gbt))
       .fit(sizedForTrees(train))
     evalAll(model, test, target, s"gbtMaxIter=$maxIter")
   }
@@ -242,19 +295,18 @@ object Forecast {
     features.zip(rf.featureImportances.toArray).sortBy(-_._2).take(k).toSeq
   }
 
-  /** The reference's trimmed dev grid; the full 9-point grid
-    * (regParam {0.01,0.1,1.0} × elasticNet {0,0.5,1},
-    * `forecasting_model.py:272-320`) is [[trainLinearRegression]]'s default.
-    */
-  val FastLrGrid: Seq[(Double, Double)] =
-    Seq((0.01, 0.0), (0.1, 0.0), (0.1, 0.5))
-
   /** End-to-end forecast (the reference's stage 4): features → 70/30
     * chronological split (cutoffs derived from the data's date range) →
     * LR grid AND RF grid → best of both by test RMSE (M11, the reference's
     * model comparison, `forecasting_model.py:481-525`) → predictions
     * `(id, date, target, prediction)` from the winner.
     *
+    * - The first pass over the cached features sums the LR Gram per date
+    *   ([[LinearGram.byKey]]). The date range, and so the cutoffs, come
+    *   from its keys, and the three LR folds are sums of its dates: the
+    *   whole LR grid, its refit and its test RMSE and R² are local
+    *   arithmetic. The second pass materializes the winner's predictions
+    *   and measures its test MAE.
     * - `fastGrid=true` trims LR to the 3-point dev grid and skips RF — the
     *   cheap loop for iterating; the DEFAULT is full reference parity.
     * - GBT ([[trainGbt]]) stays out of the selection, as the reference's
@@ -268,38 +320,27 @@ object Forecast {
           fastGrid: Boolean = false, modelDir: Option[String] = None)
       : (DataFrame, FitResult) = {
     val feats = computeFeatures(daily, idCol, dateCol, target).cache()
-    // phase boundary: the cutoff collect below is the first action over
-    // the cached feature frame, so it pays the whole window-heavy
-    // feature build — time it as the "features" phase
-    val Array(minD, maxD) = graft.tools.PhaseTimer.timed("forecast.features") {
-      feats.agg(min(col(dateCol)), max(col(dateCol)))
-        .collect().head.toSeq.map(_.toString).toArray
-    }
-    val span = java.time.temporal.ChronoUnit.DAYS.between(
-      java.time.LocalDate.parse(minD), java.time.LocalDate.parse(maxD))
-    val testCutoff = java.time.LocalDate.parse(minD).plusDays(span * 7 / 10)
-      .toString
-    val valCutoff = java.time.LocalDate.parse(minD).plusDays(span * 5 / 10)
-      .toString
-    // train/test cached: every grid fit (LR points, RF points, refits) and
-    // the final transform re-scan them; uncached they'd replay the
-    // window-heavy feature lineage per fit
-    val train = feats.filter(col(dateCol) < lit(testCutoff)).cache()
-    val test = feats.filter(col(dateCol) >= lit(testCutoff)).cache()
     val fcols = featureCols(feats, Seq(idCol, dateCol, target))
+    // the first action over the cached frame: it also pays the
+    // window-heavy feature build
+    val byDate = graft.tools.PhaseTimer.timed("forecast.grid_LinearRegression") {
+      LinearGram.byKey(feats, unix_date(col(dateCol).cast("date")),
+        fcols.toSeq, target)
+    }
+    val (valDay, testDay) = cutoffDays(byDate.keys)
+    val testCutoff = java.time.LocalDate.ofEpochDay(testDay).toString
+    val valCutoff = java.time.LocalDate.ofEpochDay(valDay).toString
+    val train = feats.filter(col(dateCol) < lit(testCutoff))
+    val test = feats.filter(col(dateCol) >= lit(testCutoff))
     val trainers: Seq[(String, () => FitResult)] =
       Seq("LinearRegression" -> (() =>
-        if (fastGrid)
-          trainLinearRegression(train, test, fcols, target, valCutoff,
-            dateCol, grid = FastLrGrid)
-        else
-          trainLinearRegression(train, test, fcols, target, valCutoff,
-            dateCol))) ++
+        trainLinearRegression(byDate, valDay, testDay, fcols, target,
+          if (fastGrid) FastLrGrid else ReferenceLrGrid))) ++
       (if (fastGrid) Nil
        else Seq("RandomForest" -> (() =>
          trainRandomForest(train, test, fcols, target, valCutoff, dateCol))))
     // model families train concurrently too (independent jobs on the same
-    // cached frames); selection order is the declared Seq order. Each
+    // cached frame); selection order is the declared Seq order. Each
     // family's grid is phase-timed in its own thread — concurrent phases
     // accumulate their OWN wall time, so the phase sums can exceed the
     // fused query's wall clock (PhaseTimer contract).
@@ -308,23 +349,24 @@ object Forecast {
         name -> graft.tools.PhaseTimer.timed(s"forecast.grid_$name")(t())
     }
     val (bestName, best) = candidates.minBy(_._2.rmse)
-    modelDir.foreach { dir =>
-      best.model.write.overwrite().save(s"$dir/best_forecasting_model")
-      graft.io.Writers.textFile(train.sparkSession, s"$dir/model_metadata.txt",
-        Seq(s"Best Model: $bestName", s"Params: ${best.bestParams}",
-          f"MAE: ${best.mae}%.4f", f"RMSE: ${best.rmse}%.4f",
-          f"R2: ${best.r2}%.4f", s"Features Used: ${fcols.length}")
-          .mkString("\n"))
-    }
     val preds = best.model.transform(test)
       .select(col(idCol), col(dateCol), col(target), col("prediction"))
       .cache()
-    // materialize preds, then DROP the feature-lineage caches: leaving the
-    // wide cached train/test frames pinned after training measurably slows
-    // every later query in the session (storage pressure + GC churn), and
-    // nothing downstream needs them once preds is materialized
-    graft.tools.PhaseTimer.timed("forecast.winner_transform")(preds.count())
-    feats.unpersist(); train.unpersist(); test.unpersist()
-    (preds, best.copy(bestParams = s"model=$bestName,${best.bestParams}"))
+    // one pass materializes preds and measures the winner's test MAE; then
+    // DROP the feature cache: leaving the wide cached frame pinned after
+    // training measurably slows every later query in the session
+    // (storage pressure + GC churn), and nothing downstream needs it
+    val fit = best.copy(mae =
+      graft.tools.PhaseTimer.timed("forecast.winner_transform")(mae(preds, target)))
+    feats.unpersist()
+    modelDir.foreach { dir =>
+      fit.model.write.overwrite().save(s"$dir/best_forecasting_model")
+      graft.io.Writers.textFile(preds.sparkSession, s"$dir/model_metadata.txt",
+        Seq(s"Best Model: $bestName", s"Params: ${fit.bestParams}",
+          f"MAE: ${fit.mae}%.4f", f"RMSE: ${fit.rmse}%.4f",
+          f"R2: ${fit.r2}%.4f", s"Features Used: ${fcols.length}")
+          .mkString("\n"))
+    }
+    (preds, fit.copy(bestParams = s"model=$bestName,${fit.bestParams}"))
   }
 }

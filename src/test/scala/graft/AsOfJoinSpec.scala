@@ -118,4 +118,21 @@ class AsOfJoinSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "w1", 2L -> "w2")) // trade 3 outside, 4 wrong key
   }
+
+  test("range join: each key compares a left and a right attribute, even " +
+    "when both sides come from one frame") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val intervals = trades.select($"sym", $"t".as("s"),
+      ($"t" + org.apache.spark.sql.functions.expr("INTERVAL 1 SECOND")).as("e"))
+    val got = AsOfJoin.rangeJoin(trades, intervals, Seq("sym"), "t", "s", "e")
+    val cond = got.queryExecution.analyzed.collectFirst { case j: Join =>
+      j.condition.get }.get
+    val keyEqs = cond.collect {
+      case EqualTo(a: AttributeReference, b: AttributeReference)
+          if a.name == "sym" && b.name == "sym" => (a.exprId, b.exprId)
+    }
+    assert(keyEqs.nonEmpty && keyEqs.forall { case (a, b) => a != b }, cond)
+    assert(got.count() == 4) // each trade falls in its own [t, t + 1 s)
+  }
 }

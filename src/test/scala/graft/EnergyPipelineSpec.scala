@@ -59,6 +59,24 @@ class EnergyPipelineSpec extends SparkSpec {
     assert(raw.count() == 2L * 40 * 48 + 2)
   }
 
+  test("ingest: a glob reads the files it matches; one matching nothing " +
+    "fails") {
+    val raw = EnergyPipeline.ingest(spark, s"$csvDir/*.csv")
+    assert(raw.inputFiles.toSeq.map(_.split('/').last) == Seq("block_0.csv"))
+    // a matched name that is itself a glob is read as that file
+    val two = Files.createTempDirectory("graft-energy-glob")
+    for (name <- Seq("block_0.csv", "block_[1].csv"))
+      Files.copy(java.nio.file.Paths.get(csvDir, "block_0.csv"),
+        two.resolve(name))
+    val both = EnergyPipeline.ingest(spark, s"$two/*.csv")
+    assert(both.inputFiles.length == 2)
+    assert(both.count() == 2 * (2L * 40 * 48 + 2))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      EnergyPipeline.ingest(spark, s"$csvDir/none_*.csv")
+    }
+    assert(e.getMessage.contains("Path does not exist"), e.getMessage)
+  }
+
   test("preprocess: sentinel dropped, households preserved, sums consistent") {
     val daily = out("daily")
     // household preservation (data_preprocessing.py:208-215 audit)

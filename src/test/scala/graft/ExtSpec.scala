@@ -1183,6 +1183,13 @@ class SimilaritySpec extends SparkSpec {
     assert(served.exceptAll(twin).count() == 0 &&
       twin.exceptAll(served).count() == 0,
       "persisted filtered search diverged from the twin")
+    // the public facade serves the same rows
+    val viaFacade = graft.api.Graft.annIndexSearchFiltered(spark, dir,
+      queries, "vec_id", "embedding", k = 5, allowedUids = allow,
+      maxBucket = 40)
+    assert(viaFacade.exceptAll(served).isEmpty &&
+      served.exceptAll(viaFacade).isEmpty,
+      "Graft.annIndexSearchFiltered diverged from AnnIndex.search")
     // and the filter genuinely bites: the unfiltered search over the
     // same index returns some disallowed neighbor
     val unfiltered = A.search(spark, dir, queries, "vec_id", "embedding",
@@ -1464,8 +1471,9 @@ class SimilaritySpec extends SparkSpec {
     assert(!A.maintain(spark, dir, drift + 0.1))
     assert(A.currentRoot(spark, dir) == dir)
     // at/below the measured drift: exactly one rebuild — tombstones
-    // physically purged, both budgets reset
-    assert(A.maintain(spark, dir, drift))
+    // physically purged, both budgets reset (through the public facade,
+    // which delegates to AnnIndex.maintain)
+    assert(graft.api.Graft.annIndexMaintain(spark, dir, drift))
     assert(A.currentRoot(spark, dir) == s"$dir/r=1",
       "maintain must publish the rebuild's committed version")
     val st = A.stats(spark, dir).head()
