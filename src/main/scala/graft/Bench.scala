@@ -5,7 +5,7 @@ import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 import graft.Verify.q
-import graft.tools.{PhaseTimer, Probe, StageMetrics}
+import graft.tools.{Probe, StageMetrics}
 
 /** Benchmark main: times every [[SparkEntry]] query against
   * `SPARK_GRAFT_SF_DIR` on `local[SPARK_GRAFT_CPUS]` (default: every core),
@@ -165,14 +165,6 @@ object Bench {
         s""""warm_sec":${w.fold("null")(x => jnum(x.wallSec))},""" +
         s""""warm_cpu_sec":${w.fold("null")(x => jnum(x.m.cpuSec))}}""")
     })
-    // operator-internal phase map (PhaseTimer): per-phase fit/transform
-    // seconds for the ML family (forecast.* and anomaly.* keys, summed
-    // over the run), the axis that decides "variance or plan
-    // regression" without re-running anything. Concurrent phases
-    // accumulate their own thread's wall time (sums may exceed the fused
-    // wall clock — documented PhaseTimer semantics).
-    val mlPhases = jobj(PhaseTimer.snapshot.toSeq.sortBy(_._1)
-      .map { case (k, v) => k -> jnum(v) })
     // per-family cost attribution (family = first token after q_): the
     // suite total decomposed into ~15 stable groups, so run-over-run
     // growth reads as "which family got more expensive / gained queries"
@@ -187,7 +179,7 @@ object Bench {
       if (sec < 0) -1.0 else sec * math.max(0, n - 1)
     val sharedJson =
       s"""{"ann_coarse_sec":${jnum(annCoarseSec)},"ann_n":$annN,"ann_relearn_sec":${jnum(relearn(annCoarseSec, annN))},"dedup_minhash_sec":${jnum(minhashSec)},"dedup_n":$dedupN,"dedup_relearn_sec":${jnum(relearn(minhashSec, dedupN))}}"""
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","value_cpu":${jnum(totalCpu)},"queries":$fullQs,"perq":$perQ,"warm":$warmQs,"warm_cpu":$warmCpuQs,"shuffle":$shuffleQs,"families":$families,"ml_phases":$mlPhases,"shared":$sharedJson,"ml_fused":$mlFused,"errors":$errJsonFull,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","value_cpu":${jnum(totalCpu)},"queries":$fullQs,"perq":$perQ,"warm":$warmQs,"warm_cpu":$warmCpuQs,"shuffle":$shuffleQs,"families":$families,"shared":$sharedJson,"ml_fused":$mlFused,"errors":$errJsonFull,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json")
       try w.println(detail) finally w.close()

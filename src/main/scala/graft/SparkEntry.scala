@@ -42,7 +42,10 @@ object SparkEntry {
     * unpersist, and accumulated entries slow later queries and pin storage
     * memory. The one clear before the first `q_ml_*` releases the plain
     * queries' caches before model training; none runs between the pair's
-    * halves, which would retrain the model.
+    * halves. A clear there would not retrain the model, since the
+    * `MlQueries` memo holds the fitted frames, but it would drop their
+    * caches, so the second half would recompute the features and the
+    * transforms.
     */
   def runOrder(names: Iterable[String]): Seq[(String, Boolean)] = {
     val (ml, plain) = names.toSeq.sorted.partition(_.startsWith("q_ml_"))

@@ -20,17 +20,15 @@ object Verify {
         // CacheScope: the write materializes inside the scope, then the
         // operators' internal caches are released — the scoped-lifecycle
         // pattern for many-corpora sessions (the clearCache above stays as
-        // the backstop for query-layer caches the scope doesn't own).
-        // ML pair excluded: its memoized frames must outlive the first query.
-        def run(): Unit =
-          try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
-            .mode("overwrite").parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            failed += name
-            System.err.println(s"[verify] $name failed: " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-        if (name.startsWith("q_ml_")) run() else graft.ext.CacheScope.scoped(run())
+        // the backstop for query-layer caches the scope doesn't own; the
+        // ML pair's memoized frames are plain caches, so they outlive it)
+        try graft.ext.CacheScope.scoped(SparkEntry.queries(name)(spark, sfDir)
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[verify] $name failed: " +
+            s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        }
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -43,77 +43,25 @@ import org.apache.spark.sql.DataFrame
   * THREADING: the stack is deliberately NOT an InheritableThreadLocal —
   * pool threads are created once and reused, so creation-time inheritance
   * would hand a pool thread whatever scope happened to be open when the
-  * pool grew, forever (a stale-ownership bug worse than the gap it
-  * closes). Instead, a plan built on a worker thread while a scope is
-  * open elsewhere falls back to session-LRU and logs a warning; the
-  * deliberate cross-thread pattern takes a [[handle]] on the owning
-  * thread and wraps the worker body in [[adopt]]:
-  *
-  * {{{
-  * CacheScope.scoped {
-  *   val h = CacheScope.handle()
-  *   val fits = Future { CacheScope.adopt(h) { buildAndRun(...) } }
-  *   Await.result(fits, timeout) // adopt must complete before scope exit
-  * }
-  * }}}
+  * pool grew, forever (a stale-ownership bug). A plan built on a worker
+  * thread therefore registers with no scope and keeps the session-LRU
+  * default, even while a scope is open on another thread.
   */
 object CacheScope {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Innermost-first stack of open scopes on this thread. */
   private val active = new ThreadLocal[List[ArrayBuffer[DataFrame]]] {
     override def initialValue(): List[ArrayBuffer[DataFrame]] = Nil
   }
 
-  /** Open scopes across ALL threads — the cross-thread-gap detector. */
-  private val openScopes = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `df.cache()` + registration with the innermost open scope on this
     * thread (plain session-lifetime cache when none). All `ext/` internal
-    * caches route through here. Buffer appends synchronize because
-    * [[adopt]] lets several threads share one scope's buffer.
+    * caches route through here.
     */
   private[graft] def cache(df: DataFrame): DataFrame = {
     df.cache()
-    active.get() match {
-      case buf :: _ => buf.synchronized { buf += df }
-      case Nil =>
-        if (openScopes.get() > 0)
-          log.warn("CacheScope: cache registered on a thread with no open " +
-            "scope while a scope is open elsewhere — the plan was likely " +
-            "built on a pool thread, so this cache falls back to the " +
-            "session-LRU lifecycle. For scope-owned cross-thread work, " +
-            "take CacheScope.handle() on the owning thread and wrap the " +
-            "worker body in CacheScope.adopt(handle) { ... }.")
-    }
+    active.get().headOption.foreach(_ += df)
     df
-  }
-
-  /** Opaque reference to the innermost open scope on the calling thread,
-    * for deliberate cross-thread registration via [[adopt]]. `None` when
-    * no scope is open (adopt of `None` is a no-op pass-through).
-    */
-  final class Handle private[CacheScope] (
-      private[CacheScope] val frames: ArrayBuffer[DataFrame])
-
-  def handle(): Option[Handle] =
-    active.get().headOption.map(new Handle(_))
-
-  /** Run `body` on the CURRENT thread with `h`'s scope installed as the
-    * innermost scope, so `scopedCache()` calls inside register with the
-    * scope that produced the handle. The handle's scope must still be
-    * open when `body`'s caches register (await worker completion before
-    * the owning scope exits — a scope that closed mid-body simply won't
-    * release the late registrations until... never; same contract as any
-    * escaped lazy frame).
-    */
-  def adopt[T](h: Option[Handle])(body: => T): T = h match {
-    case None => body
-    case Some(handle) =>
-      active.set(handle.frames :: active.get())
-      try body
-      finally active.set(active.get().tail)
   }
 
   /** `.scopedCache()` — drop-in for `.cache()` in operator chains; routes
@@ -131,22 +79,16 @@ object CacheScope {
   def scoped[T](body: => T): T = {
     val buf = new ArrayBuffer[DataFrame]
     active.set(buf :: active.get())
-    openScopes.incrementAndGet()
     try body
     finally {
-      openScopes.decrementAndGet()
       val outers = active.get().tail
       active.set(outers)
       // blocking=false: eviction proceeds async, same as Dataset.unpersist's
       // default; double-unpersist (operators that already release their own
-      // short-lived caches) is a no-op. Snapshot under the buffer lock —
-      // an adopt()ed worker may still be appending (contract violation,
-      // but tearing a concurrent append must not corrupt the walk).
-      val snapshot = buf.synchronized { buf.toList }
-      snapshot.foreach { df =>
-        val ownedByOuter = outers.exists(outer =>
-          outer.synchronized { outer.toList }.exists(o =>
-            o.queryExecution.analyzed.sameResult(df.queryExecution.analyzed)))
+      // short-lived caches) is a no-op
+      buf.foreach { df =>
+        val ownedByOuter = outers.exists(_.exists(o =>
+          o.queryExecution.analyzed.sameResult(df.queryExecution.analyzed)))
         if (!ownedByOuter) {
           try df.unpersist()
           catch { case NonFatal(_) => () }

@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
@@ -43,32 +43,19 @@ object Anomaly {
       .setOutputCol("scaled_features")
     val km = new KMeans().setK(k).setSeed(seed)
       .setFeaturesCol("scaled_features").setPredictionCol("cluster")
-    // cache the input once: the sizing count, the scaler/KMeans fit passes,
-    // and the transform below would otherwise each replay the upstream
+    // cache the input once: the scaler and KMeans fit passes and the
+    // transform below would otherwise each replay the upstream
     // join+features lineage (lifecycle: session-LRU, same policy as
-    // withDist). Fit on the compacted view — KMeans is iterative, the same
-    // scheduling-overhead lever as the tree grids (Forecast.sizedForTrees'
-    // measured A/B); the TRANSFORM runs on the cached input itself, so
-    // downstream partitioning is whatever AQE sized that cache to (never
-    // a fixed 32: Engine.session lets AQE coalesce cached plans). Cluster
-    // floats legitimately vary with fit partitioning (init sampling) — the
+    // withDist). Its partitioning is whatever AQE coalesced the cache to
+    // (Engine.session lets AQE coalesce cached plans). Cluster floats
+    // legitimately vary with fit partitioning (init sampling) — the
     // verification contract pins metric invariants and the oracled key
     // envelope, never cluster-float hashes.
     val input = df.cache()
-    // the three estimator phases run exactly as Pipeline.fit would chain
-    // them (assemble → scaler fit/transform → kmeans fit on the scaled
-    // frame — bit-identical staging), but individually timed into
-    // PhaseTimer so BENCH_DETAIL can adjudicate fit-time variance per
-    // phase (q_ml_anomaly's wall bounced across rounds with no code
-    // change; the phase map decides variance vs regression)
-    val sized = graft.ml.Forecast.sizedForTrees(input)
-    val prep = graft.tools.PhaseTimer.timed("anomaly.prep_fit") {
-      new Pipeline().setStages(Array(assembler, scaler)).fit(sized)
-    }
-    val kmModel = graft.tools.PhaseTimer.timed("anomaly.kmeans_fit") {
-      km.fit(prep.transform(sized))
-    }
-    val centers: Array[Vector] = kmModel.clusterCenters
+    val model = new Pipeline().setStages(Array(assembler, scaler, km))
+      .fit(input)
+    val centers: Array[Vector] =
+      model.stages.last.asInstanceOf[KMeansModel].clusterCenters
     // U1 as a native codegen'd expression over the embedded centroid matrix
     // (graft.functions.CentroidDist): the reference's per-row Python UDF →
     // whole-stage-codegen'd distance, bit-equal to
@@ -77,16 +64,11 @@ object Anomaly {
     // cache: consumed by both the stats agg and the join-back — uncached,
     // the KMeans transform + full upstream lineage would execute twice per
     // materialization (lifecycle: session-LRU, same policy as Dedup)
-    val withDist = kmModel.transform(prep.transform(input))
+    val withDist = model.transform(input)
       .withColumn("distance_to_center",
         graft.functions.CentroidFunctions.graft_centroid_dist(
           col("scaled_features"), col("cluster"), centers.map(_.toArray)))
       .cache()
-    // materialize the cache inside the timed scope: the transform cost
-    // lands in the phase map instead of whichever consumer's action runs
-    // first (the stats agg below would have paid it anyway — same total
-    // work, now attributed)
-    graft.tools.PhaseTimer.timed("anomaly.transform")(withDist.count())
     // W5 at scale: agg + broadcast join-back instead of unbounded window
     val stats = withDist.groupBy(col("cluster")).agg(
       avg(col("distance_to_center")).as("cluster_mean_dist"),

@@ -103,28 +103,23 @@ object Forecast {
     * overlapping them hides per-fit scheduling latency). Results return in
     * grid order — selection is bit-identical to the sequential loop.
     */
-  private def parGrid[A, B](grid: Seq[A], parallelism: Int = 4)(fit: A => B)
-      : Seq[B] = {
+  private def parGrid[A, B](grid: Seq[A])(fit: A => B): Seq[B] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, grid.size)))
+      math.max(1, math.min(4, grid.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try Await.result(Future.sequence(grid.map(g => Future(fit(g)))), Duration.Inf)
     finally pool.shutdown()
   }
 
-  /** One cached transform, three metrics — three separate evaluate() calls
-    * on an uncached frame would re-run the transform + upstream lineage
-    * per metric.
+  /** RMSE, MAE and R² of `model` on `test` from one pass: the
+    * `RegressionMetrics` that `RegressionEvaluator` builds over
+    * (prediction, label, 1.0), read three times. Its summary is computed
+    * once, so the three metrics are the evaluator's values from one job.
     */
   private def evalAll(model: PipelineModel, test: DataFrame, target: String,
                       params: String): FitResult = {
-    val pred = model.transform(test).cache()
-    val r = FitResult(model,
-      evaluator("rmse", target).evaluate(pred),
-      evaluator("mae", target).evaluate(pred),
-      evaluator("r2", target).evaluate(pred), params)
-    pred.unpersist()
-    r
+    val m = evaluator("rmse", target).getMetrics(model.transform(test))
+    FitResult(model, m.rootMeanSquaredError, m.meanAbsoluteError, m.r2, params)
   }
 
   /** Mean |target − prediction| in one job: an RDD mean has no shuffle
@@ -203,32 +198,6 @@ object Forecast {
       1 - sse / test.centeredYY, s"regParam=$reg,elasticNet=$en")
   }
 
-  /** Partition-sizing for tree-ensemble fits: tree training is iterative
-    * (one distributed stats pass per node group per depth level), so its
-    * cost is jobs × per-task overhead — 32 partitions of a few hundred
-    * rows each turns a seconds-long fit into minutes of scheduling
-    * (measured 103 s → seconds for the RF grid at sf0.1). But the floor
-    * matters as much as the ceiling: the grid fits CONCURRENTLY (4 points
-    * at once), so 1 partition per fit strands all but 4 cores. The r10
-    * A/B at sf0.1 (each config twice, JIT-warmed): 1 part 11.9 s,
-    * 4 parts 7.6 s, 8 parts 6.1 s, 32 parts 7.7 s for the 4-point grid —
-    * the optimum is partitions-per-fit ≈ cores / concurrent-fits. Target
-    * ~2k rows per partition, capped at the cluster parallelism: at 100 TB
-    * the cap leaves partitioning at the cluster's own width (unchanged
-    * from before); at dev SF it lands the fit near the measured optimum.
-    * (RF float outputs legitimately vary with fit partitioning — bagging
-    * seeds per partition index — which is why MlSpec pins metric ranges
-    * and the oracled `_keys` envelopes, never float hashes.)
-    */
-  private[ml] def sizedForTrees(df: DataFrame,
-                                rowsPerPartition: Long = 2048): DataFrame = {
-    val n = df.count()
-    val parts = math.max(1, math.min(
-      ((n + rowsPerPartition - 1) / rowsPerPartition).toInt,
-      df.sparkSession.sparkContext.defaultParallelism))
-    if (df.rdd.getNumPartitions <= parts) df else df.coalesce(parts)
-  }
-
   /** M5: RF over a trees×depth grid on raw (unscaled) features, seed=42. */
   def trainRandomForest(train: DataFrame, test: DataFrame,
                         features: Array[String], target: String,
@@ -240,12 +209,8 @@ object Forecast {
     // assembler is a pure Transformer — assemble the inner frames ONCE and
     // grid over the bare RF: identical selection, no per-config
     // re-assembly
-    // cache BEFORE sizedForTrees: its count() then populates the cache, and
-    // the coalesced view reads through it — uncached, the filter+assembly
-    // lineage would execute twice (once for the count, again on first fit)
-    val assembledInner = assembler.transform(
+    val innerTrain = assembler.transform(
       train.filter(col(dateCol) < lit(valCutoff))).cache()
-    val innerTrain = sizedForTrees(assembledInner)
     val innerVal = assembler.transform(
       train.filter(col(dateCol) >= lit(valCutoff))).cache()
     val best = parGrid(grid) { case (t, d) =>
@@ -254,11 +219,11 @@ object Forecast {
       val m = rf.fit(innerTrain)
       (t, d, evaluator("rmse", target).evaluate(m.transform(innerVal)))
     }.minBy(_._3)
-    assembledInner.unpersist(); innerVal.unpersist()
+    innerTrain.unpersist(); innerVal.unpersist()
     val rf = new RandomForestRegressor().setFeaturesCol("features")
       .setLabelCol(target).setNumTrees(best._1).setMaxDepth(best._2).setSeed(42)
     val model = new Pipeline().setStages(Array(assembler, rf))
-      .fit(sizedForTrees(train))
+      .fit(train)
     evalAll(model, test, target, s"numTrees=${best._1},maxDepth=${best._2}")
   }
 
@@ -271,7 +236,7 @@ object Forecast {
       .setFeaturesCol("features").setLabelCol(target)
       .setMaxIter(maxIter).setSeed(42)
     val model = new Pipeline().setStages(Array(assembler(features), gbt))
-      .fit(sizedForTrees(train))
+      .fit(train)
     evalAll(model, test, target, s"gbtMaxIter=$maxIter")
   }
 
@@ -323,31 +288,21 @@ object Forecast {
     val fcols = featureCols(feats, Seq(idCol, dateCol, target))
     // the first action over the cached frame: it also pays the
     // window-heavy feature build
-    val byDate = graft.tools.PhaseTimer.timed("forecast.grid_LinearRegression") {
-      LinearGram.byKey(feats, unix_date(col(dateCol).cast("date")),
-        fcols.toSeq, target)
-    }
+    val byDate = LinearGram.byKey(feats, unix_date(col(dateCol).cast("date")),
+      fcols.toSeq, target)
     val (valDay, testDay) = cutoffDays(byDate.keys)
     val testCutoff = java.time.LocalDate.ofEpochDay(testDay).toString
     val valCutoff = java.time.LocalDate.ofEpochDay(valDay).toString
     val train = feats.filter(col(dateCol) < lit(testCutoff))
     val test = feats.filter(col(dateCol) >= lit(testCutoff))
-    val trainers: Seq[(String, () => FitResult)] =
-      Seq("LinearRegression" -> (() =>
-        trainLinearRegression(byDate, valDay, testDay, fcols, target,
-          if (fastGrid) FastLrGrid else ReferenceLrGrid))) ++
+    // the families run in turn: the LR family is driver arithmetic, so
+    // only the RF grid points gain from running concurrently
+    val candidates =
+      Seq("LinearRegression" -> trainLinearRegression(byDate, valDay, testDay,
+        fcols, target, if (fastGrid) FastLrGrid else ReferenceLrGrid)) ++
       (if (fastGrid) Nil
-       else Seq("RandomForest" -> (() =>
-         trainRandomForest(train, test, fcols, target, valCutoff, dateCol))))
-    // model families train concurrently too (independent jobs on the same
-    // cached frame); selection order is the declared Seq order. Each
-    // family's grid is phase-timed in its own thread — concurrent phases
-    // accumulate their OWN wall time, so the phase sums can exceed the
-    // fused query's wall clock (PhaseTimer contract).
-    val candidates = parGrid(trainers, parallelism = trainers.size) {
-      case (name, t) =>
-        name -> graft.tools.PhaseTimer.timed(s"forecast.grid_$name")(t())
-    }
+       else Seq("RandomForest" ->
+         trainRandomForest(train, test, fcols, target, valCutoff, dateCol)))
     val (bestName, best) = candidates.minBy(_._2.rmse)
     val preds = best.model.transform(test)
       .select(col(idCol), col(dateCol), col(target), col("prediction"))
@@ -356,8 +311,7 @@ object Forecast {
     // DROP the feature cache: leaving the wide cached frame pinned after
     // training measurably slows every later query in the session
     // (storage pressure + GC churn), and nothing downstream needs it
-    val fit = best.copy(mae =
-      graft.tools.PhaseTimer.timed("forecast.winner_transform")(mae(preds, target)))
+    val fit = best.copy(mae = mae(preds, target))
     feats.unpersist()
     modelDir.foreach { dir =>
       fit.model.write.overwrite().save(s"$dir/best_forecasting_model")

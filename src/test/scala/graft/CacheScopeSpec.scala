@@ -115,28 +115,6 @@ class CacheScopeSpec extends SparkSpec {
     escaped.unpersist(blocking = true)
   }
 
-  test("cross-thread: adopt(handle) attaches worker caches to the " +
-      "owning scope") {
-    spark.catalog.clearCache()
-    import spark.implicits._
-    @volatile var adopted: org.apache.spark.sql.DataFrame = null
-    CacheScope.scoped {
-      val h = CacheScope.handle()
-      assert(h.nonEmpty)
-      val t = new Thread(() => CacheScope.adopt(h) {
-        adopted = CacheScope.cache(Seq(8).toDF("w"))
-        adopted.count(): Unit
-      })
-      t.start(); t.join() // worker completes BEFORE the scope exits
-      assert(adopted.storageLevel != StorageLevel.NONE)
-    }
-    assert(adopted.storageLevel == StorageLevel.NONE,
-      "adopted worker cache survived the owning scope")
-    assert(entries == 0)
-    // adopt of None (no scope open) is a plain pass-through
-    assert(CacheScope.adopt(None) { 41 + 1 } == 42)
-  }
-
   test("multi-corpus session soak: storage returns to baseline after " +
       "every scoped pass") {
     // the 100 TB session pattern CacheScope exists for: N sequential

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.DataFrame
@@ -225,6 +226,51 @@ class MlSpec extends SparkSpec {
     val imp = Forecast.featureImportances(fit.model, fcols, k = 5)
     assert(imp.length == 5 && imp.head._2 >= imp.last._2)
     f.unpersist()
+  }
+
+  test("RF test metrics from one pass equal RegressionEvaluator's, bit " +
+      "for bit") {
+    val f = Forecast.computeFeatures(daily).cache()
+    val cut = "2024-01-27"
+    val train = f.filter(col("date") < lit(cut))
+    // one partition: the metrics merge per-partition summaries in task
+    // completion order, so over several partitions the last bits of two
+    // passes over the same rows may differ
+    val test = f.filter(col("date") >= lit(cut)).coalesce(1)
+    val fcols = Forecast.featureCols(f, Seq("user_id", "date", "daily_value"))
+    val fit = Forecast.trainRandomForest(train, test, fcols, "daily_value",
+      valCutoff = "2024-01-24", grid = Seq((10, 4)))
+    val pred = fit.model.transform(test)
+    for ((metric, got) <- Seq("rmse" -> fit.rmse, "mae" -> fit.mae,
+        "r2" -> fit.r2)) {
+      val want = new RegressionEvaluator().setLabelCol("daily_value")
+        .setMetricName(metric).evaluate(pred)
+      assert(java.lang.Double.doubleToLongBits(got) ==
+        java.lang.Double.doubleToLongBits(want), s"$metric: $got vs $want")
+    }
+    f.unpersist()
+  }
+
+  test("job budget: Anomaly.run runs in 20 jobs") {
+    // Measured twice at local[4], 20 both times: the scaler fit, KMeans'
+    // initialization and iterations, the materialization of the input and
+    // distance caches and of AQE's stages (a cached plan under AQE
+    // materializes in a job of its own), and the collect. It was 21 with
+    // a partition-sizing count and a count that only fed a phase timer.
+    // Raise the budget only with a reason.
+    daily.count()
+    val (preds, _) = Forecast.run(daily, fastGrid = true)
+    val sc = spark.sparkContext
+    val m = graft.tools.StageMetrics.attach(sc)
+    try {
+      val t0 = m.read()
+      Anomaly.run(daily, preds).collect()
+      val jobs = (m.read() - t0).jobs
+      assert(jobs <= 20, s"Anomaly.run ran $jobs jobs")
+    } finally {
+      sc.removeSparkListener(m)
+      preds.unpersist()
+    }
   }
 
   test("anomaly: clusters in range, rate bounded, deterministic with seed") {
