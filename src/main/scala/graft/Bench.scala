@@ -5,6 +5,7 @@ import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 import graft.Verify.q
+import graft.ext.CacheScope
 import graft.tools.{Probe, StageMetrics}
 
 /** Benchmark main: times every [[SparkEntry]] query against
@@ -13,9 +14,9 @@ import graft.tools.{Probe, StageMetrics}
   * exits 1 if any query failed (a broken query must fail the bench, not
   * silently record a wall time).
   *
-  * One path: an untimed warm-up, then a cold pass and a warm pass in
-  * [[SparkEntry.runOrder]], each query timed by [[Probe.measure]], then the
-  * shared-artifact timings.
+  * One path: an untimed warm-up, then a cold pass and a warm pass in name
+  * order, each query timed by [[Probe.measure]] inside its own
+  * [[CacheScope]], then the shared-artifact timings.
   *
   * Reporting notes:
   *  - `value` is the sum of cold walls, `value_cpu` the sum of cold
@@ -54,43 +55,45 @@ object Bench {
       Seq(Tables.events _, Tables.lineitem _, Tables.documents _,
         Tables.embeddings _).foreach(t => t(spark, sfDir).count())
     } catch { case NonFatal(e) => errors("warmup") = describe(e) }
-    // One pass over `order`: the untimed gc before each query keeps one
-    // query's allocation churn from being billed to the next one's wall.
-    def pass(order: Seq[(String, Boolean)]): Seq[(String, Try[Probe.Reading])] =
-      order.map { case (name, clear) =>
-        if (clear) spark.catalog.clearCache()
+    // One pass over `names`: the untimed gc before each query keeps one
+    // query's allocation churn from being billed to the next one's wall;
+    // the query's scope releases its caches after its timed window.
+    def pass(names: Seq[String]): Seq[(String, Try[Probe.Reading])] =
+      names.map { name =>
         System.gc()
-        name -> Try(Probe.measure(spark, acct, sfDir, name))
+        name -> Try(CacheScope.scoped(Probe.measure(spark, acct, sfDir, name)))
       }
-    val order = SparkEntry.runOrder(SparkEntry.queries.keys)
-    val coldRuns = pass(order)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val coldRuns = pass(names)
     coldRuns.foreach {
       case (name, Failure(e)) => errors(name) = describe(e)
       case _ => ()
     }
     val cold = coldRuns.collect { case (name, Success(r)) => name -> r }
-    // Second, WARM pass: same order and cache clearing, but the JVM now has
+    // Second, WARM pass: same order and scopes, but the JVM now has
     // every query's generated code JIT'd. Cold numbers stay the headline
     // (what a fresh cluster pays); the warm readings separate a cold-run
     // drift (suite ordering, Janino compile, JIT) from a plan change. The
     // cold pass already reported any error.
-    val warm = pass(order.filterNot(_._1.startsWith("q_ml_")))
+    val warm = pass(names.filterNot(_.startsWith("q_ml_")))
       .collect { case (name, Success(r)) => name -> r }.toMap
-    // Shared-artifact attribution: per-query clearCache is the correct
-    // isolation cadence (each query pays exactly its own plan), but it
-    // means every q_ann_* query re-learns the SAME coarse quantizer
-    // chain. Time that build ONCE, separately, so the suite total stays
-    // interpretable as queries accumulate: headline carries
-    // shared.ann_coarse_sec (one build) and shared.ann_relearn_sec (the
-    // implied re-learn overhead inside the named ann totals — what a
-    // production session sharing one index would NOT pay).
+    // Shared-artifact attribution: each query's scope releases its own
+    // caches (each query pays exactly its own plan), so every q_ann_*
+    // query re-learns the SAME coarse quantizer chain. Time that build
+    // ONCE, separately, so the suite total stays interpretable as queries
+    // accumulate: headline carries shared.ann_coarse_sec (one build) and
+    // shared.ann_relearn_sec (the implied re-learn overhead inside the
+    // named ann totals — what a production session sharing one index
+    // would NOT pay).
     // -1.0 marks a FAILED shared build — distinguishable from a fast one
     def timeShared(f: => Unit): Double =
       try {
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        f
-        (System.nanoTime() - t0) / 1e9
+        System.gc()
+        CacheScope.scoped {
+          val t0 = System.nanoTime()
+          f
+          (System.nanoTime() - t0) / 1e9
+        }
       } catch { case NonFatal(_) => -1.0 }
     // count only clean queries that actually RE-LEARN the artifact
     // (brute-force and hyperplane-LSH never train the coarse quantizer;

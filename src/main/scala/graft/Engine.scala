@@ -20,6 +20,8 @@ object Engine {
     * Smoke, the tools and the tests all run this session. `local[cpus]`
     * with one shuffle partition per core, UTC, UI off, WARN logging and
     * [[GraftExtensions]], then `confs` (applied last, so they win).
+    * Nothing clears the session's cache: a [[graft.ext.CacheScope]]
+    * releases the caches registered inside it.
     *
     * `canChangeCachedPlanOutputPartitioning=true`: upstream Spark disables
     * AQE partition coalescing for any plan that feeds a `.cache()` (to keep

@@ -34,21 +34,4 @@ object SparkEntry {
       MlQueries.oracles ++ AdvancedQueries.oracles ++ SessionQueries.oracles ++
       PipelineQueries.oracles ++ CorpusQueries.oracles ++ ScaleQueries.oracles ++
       RelationalQueries.oracles
-
-  /** The order Bench and Verify run `names` in, each paired with whether
-    * `clearCache` runs before it. Sorted, so every run executes the same
-    * sequence, with the memoized `q_ml_*` pair last. Each query pays for
-    * exactly its own caches: operators cache internal frames they cannot
-    * unpersist, and accumulated entries slow later queries and pin storage
-    * memory. The one clear before the first `q_ml_*` releases the plain
-    * queries' caches before model training; none runs between the pair's
-    * halves. A clear there would not retrain the model, since the
-    * `MlQueries` memo holds the fitted frames, but it would drop their
-    * caches, so the second half would recompute the features and the
-    * transforms.
-    */
-  def runOrder(names: Iterable[String]): Seq[(String, Boolean)] = {
-    val (ml, plain) = names.toSeq.sorted.partition(_.startsWith("q_ml_"))
-    plain.map(_ -> true) ++ ml.zipWithIndex.map { case (n, i) => n -> (i == 0) }
-  }
 }

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the DuckDB compare. A failed query
+  * in name order, plus oracle_sql.json, for the DuckDB compare. Each query
+  * runs in its own [[graft.ext.CacheScope]]. A failed query
   * is logged, every other result and oracle_sql.json are still written,
   * then the failed names print on one line and the exit code is 1. */
 object Verify {
@@ -13,15 +14,11 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.runOrder(SparkEntry.queries.keys
-        .filter(name => only.forall(_.contains(name)))).foreach {
-      case (name, clear) =>
-        if (clear) spark.catalog.clearCache()
-        // CacheScope: the write materializes inside the scope, then the
-        // operators' internal caches are released — the scoped-lifecycle
-        // pattern for many-corpora sessions (the clearCache above stays as
-        // the backstop for query-layer caches the scope doesn't own; the
-        // ML pair's memoized frames are plain caches, so they outlive it)
+    SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name))).foreach { name =>
+        // the write materializes inside the query's CacheScope, which then
+        // releases every cache the query registered (the MlQueries memo's
+        // frames are plain caches, so they outlive it)
         try graft.ext.CacheScope.scoped(SparkEntry.queries(name)(spark, sfDir)
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
         catch { case e: Throwable =>
@@ -29,7 +26,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: " +
             s"${e.getClass.getSimpleName}: ${e.getMessage}")
         }
-    }
+      }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -704,8 +704,8 @@ object Graft {
     * composition is DuckDB-oracled hash-exact end-to-end as
     * `q_corpus_build` — every gate, the trained model, the realized
     * sample, and the trained segmentation replay in one SQL chain.
-    * Gate frames are [[CacheScope]]-cached (scoped draining inside a
-    * [[scopedPass]]; session-LRU otherwise).
+    * Gate frames are [[CacheScope]]-cached: a [[scopedPass]] releases
+    * them; outside one they stay registered until unpersisted.
     */
   def corpusBuild(docs: DataFrame, textCol: String, idCol: String,
                   groupCol: String, dict: DataFrame,

@@ -67,9 +67,9 @@ object Bpe {
     * with all merges applied — the corpus-independent tokenizer state.
     *
     * Stops early if no pair remains (fully merged dictionary). Each
-    * iteration caches its dictionary via [[CacheScope.cache]] (scoped
-    * draining inside Verify; session-LRU otherwise) and unpersists the
-    * previous one once the pair-count action has materialized from it.
+    * iteration caches its dictionary via [[CacheScope.cache]] (released
+    * by the enclosing scope, if any) and unpersists the previous one once
+    * the pair-count action has materialized from it.
     */
   def train(docs: DataFrame, textCol: String,
             nMerges: Int): (Seq[Merge], DataFrame) = {

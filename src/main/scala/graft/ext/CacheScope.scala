@@ -5,25 +5,32 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
 
-/** Scoped lifecycle for operator-internal caches.
+/** The one lifetime rule for engine-internal caches.
   *
-  * The `ext/` operators cache small internal frames (shingle sets, MinHash
-  * signatures, candidate pairs) that several plan branches consume. Their
-  * default lifecycle is session-LRU: entries stay registered until storage
-  * pressure evicts them — right for a bench run that clears between
-  * queries, but an unbounded-growth vector for a long-lived session
-  * processing many corpora (100 TB = thousands of dedup passes against one
-  * SparkSession).
-  *
-  * `CacheScope.scoped { ... }` bounds that: every internal cache an
-  * operator registers while the scope is open is unpersisted when the
-  * scope closes — after the caller has materialized its results:
+  * Operators cache small internal frames (shingle sets, MinHash
+  * signatures, candidate pairs) that several plan branches consume. The
+  * unit of work that registers a cache owns it: a named query run (Bench,
+  * Verify and Probe run each query in a scope), a streaming micro-batch,
+  * or a library user's [[graft.api.Graft.scopedPass]]. Every internal
+  * cache an operator registers while `CacheScope.scoped { ... }` is open
+  * is unpersisted when the scope closes — after the caller has
+  * materialized its results:
   *
   * {{{
   * val keepers = CacheScope.scoped {
   *   Dedup.minHashVerified(corpus, "text", "doc_id").collect()
   * } // shingle/signature/candidate caches released here
   * }}}
+  *
+  * An unscoped cache is not bounded: memory pressure moves its blocks to
+  * disk (`.cache()` is MEMORY_AND_DISK), but its CacheManager entry and
+  * plans stay registered until something unpersists them, so a long-lived
+  * session processing many corpora grows without a scope. Nothing in the
+  * engine clears the whole session cache; the one session-lifetime owner
+  * is the `MlQueries` memo, whose frames are plain caches. Operators
+  * cannot own their caches instead: one that returns a lazy frame cannot
+  * release a cache its result still reads (`Dedup.keeperDelta`,
+  * `Packing.shardTokensDelta`, `AnnIndex.servedUids`).
   *
   * Results must be MATERIALIZED inside the scope (collect/count/write): a
   * lazy DataFrame escaping the scope stays correct — unpersist never
@@ -38,14 +45,14 @@ import org.apache.spark.sql.DataFrame
   * analyzed plans); the owning outer scope releases it at its own exit.
   * Registration is driver-side at plan-construction time (operators build
   * plans on the calling thread), so a ThreadLocal carries the scope
-  * stack; code outside any scope keeps the session-LRU default.
+  * stack; code outside any scope registers unowned caches.
   *
   * THREADING: the stack is deliberately NOT an InheritableThreadLocal —
   * pool threads are created once and reused, so creation-time inheritance
   * would hand a pool thread whatever scope happened to be open when the
   * pool grew, forever (a stale-ownership bug). A plan built on a worker
-  * thread therefore registers with no scope and keeps the session-LRU
-  * default, even while a scope is open on another thread.
+  * thread therefore registers with no scope and stays cached until
+  * unpersisted, even while a scope is open on another thread.
   */
 object CacheScope {
 
@@ -55,8 +62,8 @@ object CacheScope {
   }
 
   /** `df.cache()` + registration with the innermost open scope on this
-    * thread (plain session-lifetime cache when none). All `ext/` internal
-    * caches route through here.
+    * thread (an unowned cache when none). The `ext/` operators and the
+    * query layer route their internal caches through here.
     */
   private[graft] def cache(df: DataFrame): DataFrame = {
     df.cache()

@@ -15,11 +15,10 @@ import graft.ext.CacheScope.Cacheable
   *
   * Cache lifecycle: the near-dup functions cache their small
   * shingle/signature frames (one row per doc) because multiple plan
-  * branches reference them. By default the entries stay registered for the
-  * session and are evicted LRU under storage-memory pressure; long-lived
-  * sessions doing many dedup passes should materialize each pass inside
-  * [[CacheScope.scoped]], which releases that pass's entries on exit (all
-  * internal caches here register via `scopedCache()`).
+  * branches reference them. Every internal cache here registers via
+  * `scopedCache()`, so the enclosing [[CacheScope.scoped]] (a named query
+  * run, a micro-batch, a library user's pass) releases it on exit; outside
+  * a scope the entries stay registered until something unpersists them.
   */
 object Dedup {
 

@@ -62,8 +62,8 @@ object NbClassifier {
         .as("__lbl")), Seq(idCol))
     // three driver reads (weights, their stats broadcast, the scalar
     // head) consume this frame — cache it or the corpus tokenization
-    // replays per read (CacheScope contract: scoped draining inside a
-    // scoped pass, session-LRU otherwise)
+    // replays per read (CacheScope contract: released by the enclosing
+    // scope, registered until unpersisted outside one)
     val classTok = CacheScope.cache(tfTrain.groupBy(col("t"))
       .agg(sum(when(col("__lbl"), col("c")).otherwise(lit(0L))).as("c_pos"),
         sum(when(!col("__lbl"), col("c")).otherwise(lit(0L))).as("c_neg")))

@@ -37,12 +37,11 @@ object Ranks {
     * bucket and break the ntile equivalence.
     *
     * Cache contract: the input is cached and stays cached after return
-    * (session-LRU lifetime, the documented `ext/` policy) — the returned
-    * plan still reads it, so it cannot be unpersisted here without
-    * re-executing the input lineage three times. Callers ranking many
-    * large frames in one session should materialize inside
-    * [[CacheScope.scoped]] (which releases the entry on exit) or
-    * unpersist the INPUT frame once the result is materialized.
+    * — the returned plan still reads it, so it cannot be unpersisted here
+    * without re-executing the input lineage three times. The enclosing
+    * [[CacheScope.scoped]] releases the entry on exit; callers outside a
+    * scope should unpersist the INPUT frame once the result is
+    * materialized.
     */
   def distributedNtile(df: DataFrame, valueCol: String, tieCols: Seq[String],
                        nTiles: Int, tileCol: String = "tile",

@@ -42,8 +42,7 @@ object Spread {
   }
 
   /** Narrow project/filter/alias chain over a file relation — the only
-    * shape where the rdd probe is both safe and meaningful. Mirrors
-    * [[graft.plans.SpreadGenerate]]'s trigger.
+    * shape where the rdd probe is both safe and meaningful.
     */
   private def scanRooted(p: LogicalPlan): Boolean = p match {
     case Project(_, c)       => scanRooted(c)

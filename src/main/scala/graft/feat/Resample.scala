@@ -27,7 +27,8 @@ object Resample {
     */
   private def gridJoin(df: DataFrame, keyCol: String, dateCol: String,
                        valueCol: String): DataFrame = {
-    val src = df.select(col(keyCol), col(dateCol), col(valueCol)).cache()
+    val src = df.select(col(keyCol), col(dateCol), col(valueCol))
+      .transform(graft.ext.CacheScope.cache)
     val span = src.groupBy(col(keyCol))
       .agg(min(col(dateCol)).as("__d0"), max(col(dateCol)).as("__d1"))
     val grid = span.select(col(keyCol),

@@ -45,7 +45,7 @@ object Anomaly {
       .setFeaturesCol("scaled_features").setPredictionCol("cluster")
     // cache the input once: the scaler and KMeans fit passes and the
     // transform below would otherwise each replay the upstream
-    // join+features lineage (lifecycle: session-LRU, same policy as
+    // join+features lineage (lifecycle: registered until unpersisted, like
     // withDist). Its partitioning is whatever AQE coalesced the cache to
     // (Engine.session lets AQE coalesce cached plans). Cluster floats
     // legitimately vary with fit partitioning (init sampling) — the
@@ -63,7 +63,8 @@ object Anomaly {
     // surface, so ScaleAuditSpec's UDF lint covers the ML stage too
     // cache: consumed by both the stats agg and the join-back — uncached,
     // the KMeans transform + full upstream lineage would execute twice per
-    // materialization (lifecycle: session-LRU, same policy as Dedup)
+    // materialization (lifecycle: a plain cache, so the MlQueries memo's
+    // frames outlive the query scopes)
     val withDist = model.transform(input)
       .withColumn("distance_to_center",
         graft.functions.CentroidFunctions.graft_centroid_dist(

@@ -208,18 +208,19 @@ object Forecast {
     val assembler = Forecast.assembler(features)
     // assembler is a pure Transformer — assemble the inner frames ONCE and
     // grid over the bare RF: identical selection, no per-config
-    // re-assembly
+    // re-assembly. Not cached: each is a narrow filter and projection over
+    // the cached feature frame, so a cache would only add a
+    // materialization job for the concurrent fits to race for
     val innerTrain = assembler.transform(
-      train.filter(col(dateCol) < lit(valCutoff))).cache()
+      train.filter(col(dateCol) < lit(valCutoff)))
     val innerVal = assembler.transform(
-      train.filter(col(dateCol) >= lit(valCutoff))).cache()
+      train.filter(col(dateCol) >= lit(valCutoff)))
     val best = parGrid(grid) { case (t, d) =>
       val rf = new RandomForestRegressor().setFeaturesCol("features")
         .setLabelCol(target).setNumTrees(t).setMaxDepth(d).setSeed(42)
       val m = rf.fit(innerTrain)
       (t, d, evaluator("rmse", target).evaluate(m.transform(innerVal)))
     }.minBy(_._3)
-    innerTrain.unpersist(); innerVal.unpersist()
     val rf = new RandomForestRegressor().setFeaturesCol("features")
       .setLabelCol(target).setNumTrees(best._1).setMaxDepth(best._2).setSeed(42)
     val model = new Pipeline().setStages(Array(assembler, rf))

@@ -17,7 +17,6 @@ import graft.functions.{CosineSim, DotProduct}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(e.injectFunction)
-    e.injectOptimizerRule(SpreadGenerate) // opt-in: spark.graft.spread.enabled
   }
 }
 
@@ -34,18 +33,12 @@ object GraftExtensions {
 
   /** Register directly on a session, new or existing — `getOrCreate`
     * silently ignores `withExtensions` when it returns a pre-existing
-    * session, so [[graft.Engine.session]] installs graft this way only,
-    * and each session gets the [[SpreadGenerate]] rule once. Idempotent.
+    * session, so [[graft.Engine.session]] installs graft this way only.
+    * Idempotent.
     */
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
-    // the public experimental-optimizations hook takes effect on a live
-    // session (still conf-gated), where injectOptimizerRule would not
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[SpreadGenerate]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SpreadGenerate(spark)
   }
 }

@@ -22,22 +22,11 @@ object MlQueries {
     * pipeline's stage 4 → 5 dataflow), and the `_keys` envelope queries
     * project the same frames — so recomputing the grid / KMeans per query
     * would double-count training time in benchmarks for no semantic
-    * difference. Weak keys: a stopped-and-dropped session must not be
-    * pinned by the memo.
+    * difference. The memo is the one session-lifetime cache owner: the
+    * frames it holds are plain caches, so they outlive every query's
+    * [[graft.ext.CacheScope]].
     */
-  private val memo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]())
-
-  private def memoized(s: SparkSession, key: String)(mk: => DataFrame)
-      : DataFrame = {
-    val perSession = memo.synchronized {
-      var m = memo.get(s)
-      if (m == null) { m = scala.collection.mutable.Map.empty; memo.put(s, m) }
-      m
-    }
-    perSession.synchronized(perSession.getOrElseUpdate(key, mk))
-  }
+  private val memoized = new SessionMemo[DataFrame]
 
   private def forecastPreds(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir) {

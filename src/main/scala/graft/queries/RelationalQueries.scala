@@ -161,7 +161,7 @@ object RelationalQueries {
       val urgent = Tables.orders(s, dir)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"))
-        .cache()
+        .transform(graft.ext.CacheScope.cache)
       val items = RuntimeFilter.bloomInnerJoin(
         Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
@@ -620,7 +620,8 @@ object RelationalQueries {
       // the node set must see EVERY part, hub orders included — one
       // column off the scan, map-side-collapsed before its exchange
       val nodes = Tables.lineitem(s, dir)
-        .select(col("l_partkey").as("node")).distinct().cache()
+        .select(col("l_partkey").as("node")).distinct()
+        .transform(graft.ext.CacheScope.cache)
       val n = nodes.count()
       // The degree frame and each iteration's rank frame are NODE-domain-
       // sized (≤ n rows of (long, double)) — broadcastable at any dim-table
@@ -656,7 +657,7 @@ object RelationalQueries {
       val weighted = edges.join(nodeSized(deg), "src")
         .select(col("src"), col("dst"), (lit(1.0) / col("d")).as("w"))
         .repartition(col("dst"))
-        .cache()
+        .transform(graft.ext.CacheScope.cache)
       var r = nodes.withColumn("r", lit(1.0 / n))
       for (_ <- 1 to 3) {
         val contrib = weighted

@@ -63,7 +63,8 @@ object ScaleQueries {
       // cache: the exact per-key pre-agg feeds both the sketch build and
       // the estimate probe
       val exact = Tables.events(s, dir)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_exact")).cache()
+        .groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
+        .transform(graft.ext.CacheScope.cache)
       val sketch = Sketches.countMinSketch(exact, "user_id", "n_exact")
       Sketches.countMinEstimates(sketch, exact, "user_id")
         .withColumn("overest", col("est") - col("n_exact"))

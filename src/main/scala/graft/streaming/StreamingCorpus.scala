@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-import graft.ext.{Bpe, NbClassifier, Packing, TextAnalysis}
+import graft.ext.{Bpe, CacheScope, NbClassifier, Packing, TextAnalysis}
 
 /** Streaming corpus-quality gating: documents land continuously (the
   * crawl-ingest shape — a fetcher emits pages as they arrive, and the
@@ -202,13 +202,16 @@ object StreamingCorpus {
     * complete shards to `shardDir/batch_id=B` and the advanced state to
     * `stateDir/v=B`, both overwrite-mode — so a RETRIED batch recomputes
     * from the same prior state and replaces the same two outputs
-    * (StreamingSpec replays a batch and pins it).
+    * (StreamingSpec replays a batch and pins it). Every cache the batch
+    * registers is released when it ends ([[CacheScope]]): an
+    * indefinitely-running loop must not grow the session cache registry.
     */
   private[graft] def writeShardBatch(batch: DataFrame, batchId: Long,
                                      shardDir: String, stateDir: String,
                                      textCol: String, idCol: String,
                                      streamCol: String, tok: Bpe.Tokenizer,
-                                     ctxTokens: Int): Unit = {
+                                     ctxTokens: Int)
+      : Unit = CacheScope.scoped {
     val spark = batch.sparkSession
     requireNotClosed(spark, shardDir)
     val enc = tok.encodeIds(batch, textCol, idCol)
@@ -360,6 +363,7 @@ object StreamingCorpus {
     * writer. All three outputs are versioned/overwritten by batch id
     * (shards/batch_id=B, keepers/v=B, state/v=B), so a retried batch
     * recomputes from the same prior state and replaces the same outputs.
+    * Its caches are batch-scoped, as in [[writeShardBatch]].
     */
   private[graft] def writeCorpusShardBatch(batch: DataFrame, batchId: Long,
                                            outDir: String, textCol: String,
@@ -367,7 +371,7 @@ object StreamingCorpus {
                                            tok: Bpe.Tokenizer,
                                            ctxTokens: Int,
                                            keeperFoldEveryBatches: Int = 16)
-      : Unit = {
+      : Unit = CacheScope.scoped {
     val spark = batch.sparkSession
     requireNotClosed(spark, s"$outDir/shards")
     val keeperState = readRekeyedKeeperState(spark, outDir, batchId)
@@ -444,6 +448,7 @@ object StreamingCorpus {
     * its own versioned state (`ingest/v=B`, one row), so a RETRIED batch
     * re-reads the same base, assigns the SAME ids, and overwrites the
     * same outputs — the exactly-once contract extends to id assignment.
+    * Its caches are batch-scoped, as in [[writeShardBatch]].
     */
   private[graft] def writeKeyedCorpusShardBatch(batch: DataFrame,
                                                 batchId: Long,
@@ -453,7 +458,8 @@ object StreamingCorpus {
                                                 streamCol: String,
                                                 tok: Bpe.Tokenizer,
                                                 ctxTokens: Int,
-                                                salt: String): Unit = {
+                                                salt: String)
+      : Unit = CacheScope.scoped {
     val spark = batch.sparkSession
     val base = latestShardState(spark, s"$outDir/ingest", batchId)
       .map(_.head().getAs[Long]("next_base")).getOrElse(0L)
@@ -842,7 +848,8 @@ object StreamingCorpus {
     * `(keyCol, content_hash, ingest_id, streamCol, kept, live)`,
     * persisted as delta SEGMENTS (scaladoc above); all state families
     * version by batch id, so a retried batch re-reads the same inputs
-    * and replaces the same outputs.
+    * and replaces the same outputs. Its caches are batch-scoped, as in
+    * [[writeShardBatch]].
     */
   private[graft] def writeRekeyedCorpusShardBatch(batch: DataFrame,
                                                   batchId: Long,
@@ -856,7 +863,7 @@ object StreamingCorpus {
                                                   policy: graft.api.Graft.RekeyPolicy,
                                                   alertSupersededFraction: Double = 0.5,
                                                   stateCompactEveryBatches: Int = 0)
-      : Unit = {
+      : Unit = CacheScope.scoped {
     val spark = batch.sparkSession
     requireNotClosed(spark, s"$outDir/shards")
     val G = graft.api.Graft

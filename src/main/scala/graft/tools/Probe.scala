@@ -11,12 +11,13 @@ import graft.{Engine, SparkEntry}
   *
   *   Probe --sf DIR [--cpus N] [--conf k=v]... QUERY...
   *
-  * After Bench's warm-up, each query runs a cold pass and a warm pass, with
-  * clearCache and a GC before each. Per pass it prints wall time and the
-  * [[StageMetrics]] window (executor CPU, jobs, stages, tasks, shuffle
-  * read/write, spill); then the cold pass's stages ranked by CPU and its
-  * final post-AQE executed plan. `--cpus` defaults to the core count;
-  * `--conf` settings are applied last.
+  * After Bench's warm-up, each query runs a cold pass and a warm pass, each
+  * after a GC and inside its own [[graft.ext.CacheScope]], as Bench runs
+  * them (a `q_ml_*` warm pass reads the MlQueries memo's cached frames).
+  * Per pass it prints wall time and the [[StageMetrics]] window (executor
+  * CPU, jobs, stages, tasks, shuffle read/write, spill); then the cold
+  * pass's stages ranked by CPU and its final post-AQE executed plan.
+  * `--cpus` defaults to the core count; `--conf` settings are applied last.
   */
 object Probe {
   private val Usage =
@@ -75,8 +76,8 @@ object Probe {
       a.confs.map { case (k, v) => s"$k=$v" }.mkString(","))
     a.queries.foreach { q =>
       val cold = Seq("cold", "warm").map { pass =>
-        spark.catalog.clearCache(); System.gc()
-        val r = measure(spark, metrics, sf, q)
+        System.gc()
+        val r = graft.ext.CacheScope.scoped(measure(spark, metrics, sf, q))
         println(f"[probe] $q $pass: wall=${r.wallSec}%.2f s ${r.m.show} " +
           s"rows=${r.rows}")
         r

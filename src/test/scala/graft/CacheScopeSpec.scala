@@ -109,7 +109,7 @@ class CacheScopeSpec extends SparkSpec {
       t.start(); t.join()
     }
     // the scope must NOT have claimed (and released) a registration it
-    // never saw — the worker's cache keeps the session-LRU default
+    // never saw — the worker's cache stays registered until unpersisted
     assert(escaped.storageLevel != StorageLevel.NONE,
       "scope released a cache registered on a foreign thread")
     escaped.unpersist(blocking = true)

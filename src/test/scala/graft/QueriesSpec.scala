@@ -10,29 +10,26 @@ class QueriesSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
-  test("runOrder: every query once, q_ml_* last, only the first q_ml_* clears") {
-    assert(SparkEntry.runOrder(Seq("q_ml_b", "q_z", "q_ml_a", "q_a")) ==
-      Seq("q_a" -> true, "q_z" -> true, "q_ml_a" -> true, "q_ml_b" -> false))
-    val names = SparkEntry.queries.keys.toSeq
-    val order = SparkEntry.runOrder(names)
-    assert(order.map(_._1).sorted == names.sorted)
-    val firstMl = order.indexWhere(_._1.startsWith("q_ml_"))
-    assert(firstMl > 0 && order.drop(firstMl).forall(_._1.startsWith("q_ml_")))
-    order.zipWithIndex.foreach { case ((name, clear), i) =>
-      assert(clear == (!name.startsWith("q_ml_") || i == firstMl), name)
-    }
-  }
-
   test("entry returns rows (t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("every query runs at sf0.001 with a nonempty schema") {
+    // each query runs in its own CacheScope, as Bench and Verify run it,
+    // and must leave the cache registry as it found it; only the q_ml_*
+    // pair's memo keeps its frames for the session
+    def numCached() =
+      org.apache.spark.sql.graft.CacheProbe.numCachedEntries(spark)
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        try {
+        val before = numCached()
+        try graft.ext.CacheScope.scoped {
           val df = fn(spark, TestSpark.sf0001)
           if (df.schema.isEmpty) Some(s"$name: empty schema") else { df.count(); None }
+        }.orElse {
+          val left = numCached() - before
+          if (left == 0 || name.startsWith("q_ml_")) None
+          else Some(s"$name: left $left cache entries registered")
         } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))

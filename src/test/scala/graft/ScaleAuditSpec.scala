@@ -241,37 +241,41 @@ class ScaleAuditSpec extends SparkSpec {
   SparkEntry.queries.toSeq.sortBy(_._1)
     .foreach { case (name, fn) =>
       test(s"scale lint: $name") {
-        val df = fn(spark, dir)
-        df.collect()
-        val ops = allOps(df.queryExecution.executedPlan)
-        val lines = ops.map(_.simpleString(8))
-        val nested = lines.exists(l =>
-          l.startsWith("CartesianProduct") ||
-            l.startsWith("BroadcastNestedLoopJoin"))
-        if (nested && !nestedLoopOk.contains(name))
-          fail(s"unjustified nested-loop join in $name:\n" +
-            df.queryExecution.executedPlan)
-        if (windowOverSinglePartition(ops) &&
-            !singlePartitionWindowOk.contains(name))
-          fail(s"unjustified single-partition window in $name:\n" +
-            df.queryExecution.executedPlan)
-        // typed expression walk, not string matching — simpleString(8)
-        // truncates wide projections and would hide a UDF past field 8
-        val udfs = ops.flatMap(_.expressions.flatMap(_.collect {
-          case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
-        }))
-        // authorship split: a graft-authored UDF is a plan defect NOWHERE
-        // an allowance can excuse — the function's class name pins where
-        // the lambda was compiled
-        val ours = udfs.filter(_.function.getClass.getName.startsWith("graft"))
-        if (ours.nonEmpty)
-          fail(s"repo-authored ScalaUDF in $name (" +
-            ours.map(_.function.getClass.getName).distinct.mkString(", ") +
-            ") — write a codegen'd Expression instead:\n" +
-            df.queryExecution.executedPlan)
-        if (udfs.nonEmpty && !scalaUdfOk.contains(name))
-          fail(s"unjustified ScalaUDF in $name:\n" +
-            df.queryExecution.executedPlan)
+        // collect and walk inside the query's CacheScope, as Bench runs
+        // it: the walk reads the cached plans while they are registered
+        graft.ext.CacheScope.scoped {
+          val df = fn(spark, dir)
+          df.collect()
+          val ops = allOps(df.queryExecution.executedPlan)
+          val lines = ops.map(_.simpleString(8))
+          val nested = lines.exists(l =>
+            l.startsWith("CartesianProduct") ||
+              l.startsWith("BroadcastNestedLoopJoin"))
+          if (nested && !nestedLoopOk.contains(name))
+            fail(s"unjustified nested-loop join in $name:\n" +
+              df.queryExecution.executedPlan)
+          if (windowOverSinglePartition(ops) &&
+              !singlePartitionWindowOk.contains(name))
+            fail(s"unjustified single-partition window in $name:\n" +
+              df.queryExecution.executedPlan)
+          // typed expression walk, not string matching — simpleString(8)
+          // truncates wide projections and would hide a UDF past field 8
+          val udfs = ops.flatMap(_.expressions.flatMap(_.collect {
+            case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
+          }))
+          // authorship split: a graft-authored UDF is a plan defect NOWHERE
+          // an allowance can excuse — the function's class name pins where
+          // the lambda was compiled
+          val ours = udfs.filter(_.function.getClass.getName.startsWith("graft"))
+          if (ours.nonEmpty)
+            fail(s"repo-authored ScalaUDF in $name (" +
+              ours.map(_.function.getClass.getName).distinct.mkString(", ") +
+              ") — write a codegen'd Expression instead:\n" +
+              df.queryExecution.executedPlan)
+          if (udfs.nonEmpty && !scalaUdfOk.contains(name))
+            fail(s"unjustified ScalaUDF in $name:\n" +
+              df.queryExecution.executedPlan)
+        }
       }
     }
 }

@@ -1927,6 +1927,9 @@ class StreamingSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("graft-3b-out").toString
     val ckpt = Files.createTempDirectory("graft-3b-ckpt").toString
     b1.write.parquet(s"$inDir/p1")
+    def numCached() =
+      org.apache.spark.sql.graft.CacheProbe.numCachedEntries(spark)
+    val cachedBefore = numCached()
     val q = graft.streaming.StreamingCorpus.runCorpusShards(spark,
       s"$inDir/p*", outDir, ckpt, docsAll.schema, "text", "doc_id",
       "lang", model, tok, ctxTokens = 256, minTokens = 10)
@@ -1941,6 +1944,10 @@ class StreamingSpec extends SparkSpec {
       b3.write.parquet(s"$inDir/p3")
       q.processAllAvailable(); keeperCounts += keeperCount()
     } finally if (q.isActive) q.stop()
+    // each micro-batch releases the caches it registers, so the loop
+    // leaves the session cache registry as it found it
+    assert(numCached() == cachedBefore,
+      s"the loop left ${numCached() - cachedBefore} cache entries registered")
     // keeper state grows monotonically and NEVER counts a duplicate:
     // batch 2's only novel content is its non-duplicate docs, batch 3's
     // internal pair contributes ONE digest
