@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.graft.KMeansFit
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
@@ -13,9 +14,12 @@ import org.apache.spark.sql.functions._
   * features → distance-to-centroid → per-cluster z-score → flag z > 3.
   *
   * Scale choices vs the reference:
-  *  - distance UDF is a Scala udf over broadcast centroids (JVM-native; the
+  *  - the distance is `graft.functions.CentroidDist`, a whole-stage
+  *    codegen'd expression over the centroids embedded in the plan (the
   *    reference's Python row UDF crossed the py4j boundary per row batch —
   *    SURVEY.md §2.8 U1);
+  *  - the KMeans fit on a one-partition input is one job, not MLlib's ~28
+  *    one-task jobs ([[fitKMeans]]), with MLlib's model bit for bit;
   *  - per-cluster stats via groupBy + broadcast join-back, NOT an unbounded
   *    `Window.partitionBy(cluster)` (which would funnel each cluster into a
   *    single partition — a skew cliff at 100 TB; SURVEY.md §7.4.5).
@@ -34,28 +38,45 @@ object Anomaly {
       .withColumn("is_weekend",
         graft.feat.Windows.Weekend.byGte6(col("day_of_week")).cast("int"))
 
+  /** The features assembled (rows with a null or NaN skipped) and scaled
+    * by MLlib's `StandardScaler`, fit on `df` (one job).
+    */
+  private[graft] def scaled(df: DataFrame, featureColumns: Array[String])
+      : DataFrame = {
+    val prep = new Pipeline().setStages(Array(
+      new VectorAssembler().setInputCols(featureColumns)
+        .setOutputCol("features").setHandleInvalid("skip"),
+      new StandardScaler().setInputCol("features")
+        .setOutputCol("scaled_features"))).fit(df)
+    prep.transform(df)
+  }
+
+  /** MLlib's `KMeans(k, seed)` fit on `scaled`. An input of one partition
+    * is fit in one job ([[KMeansFit]]); MLlib's `KMeans.fit` would run
+    * each of its ~28 passes as a job of one task. Any other input goes to
+    * `KMeans.fit`, whose per-partition sampling and merges one task cannot
+    * replay. Both give MLlib's model, bit for bit.
+    */
+  def fitKMeans(scaled: DataFrame, k: Int, seed: Long): KMeansModel = {
+    val km = new KMeans().setK(k).setSeed(seed)
+      .setFeaturesCol("scaled_features").setPredictionCol("cluster")
+    KMeansFit.oneTask(km, scaled).getOrElse(km.fit(scaled))
+  }
+
   /** KMeans + distance + per-cluster z-score + flag. */
   def detect(df: DataFrame, featureColumns: Array[String], k: Int = 5,
              zThreshold: Double = 3.0, seed: Long = 42L): DataFrame = {
-    val assembler = new VectorAssembler().setInputCols(featureColumns)
-      .setOutputCol("features").setHandleInvalid("skip")
-    val scaler = new StandardScaler().setInputCol("features")
-      .setOutputCol("scaled_features")
-    val km = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol("scaled_features").setPredictionCol("cluster")
     // cache the input once: the scaler and KMeans fit passes and the
     // transform below would otherwise each replay the upstream
     // join+features lineage (lifecycle: registered until unpersisted, like
     // withDist). Its partitioning is whatever AQE coalesced the cache to
-    // (Engine.session lets AQE coalesce cached plans). Cluster floats
-    // legitimately vary with fit partitioning (init sampling) — the
-    // verification contract pins metric invariants and the oracled key
-    // envelope, never cluster-float hashes.
-    val input = df.cache()
-    val model = new Pipeline().setStages(Array(assembler, scaler, km))
-      .fit(input)
-    val centers: Array[Vector] =
-      model.stages.last.asInstanceOf[KMeansModel].clusterCenters
+    // (Engine.session lets AQE coalesce cached plans), and that picks the
+    // KMeans fit path. Cluster floats legitimately vary with fit
+    // partitioning (init sampling) — the verification contract pins metric
+    // invariants and the oracled key envelope, never cluster-float hashes.
+    val input = scaled(df.cache(), featureColumns)
+    val model = fitKMeans(input, k, seed)
+    val centers: Array[Vector] = model.clusterCenters
     // U1 as a native codegen'd expression over the embedded centroid matrix
     // (graft.functions.CentroidDist): the reference's per-row Python UDF →
     // whole-stage-codegen'd distance, bit-equal to
@@ -84,19 +105,13 @@ object Anomaly {
 
   /** M12: the dashboard's interactive re-clustering
     * (`streamlit_app.py:656-704` — sklearn KMeans on a ≤50k pandas sample);
-    * here the same sampled KMeans stays distributed and seeded.
+    * here the same sampled KMeans, seeded, through [[fitKMeans]].
     */
   def reclusterSample(df: DataFrame, featureColumns: Array[String], k: Int,
                       sampleFraction: Double, seed: Long = 42L): DataFrame = {
-    val sampled = df.sample(withReplacement = false, sampleFraction, seed)
-    val assembler = new VectorAssembler().setInputCols(featureColumns)
-      .setOutputCol("features").setHandleInvalid("skip")
-    val scaler = new StandardScaler().setInputCol("features")
-      .setOutputCol("scaled_features")
-    val km = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol("scaled_features").setPredictionCol("cluster")
-    new Pipeline().setStages(Array(assembler, scaler, km))
-      .fit(sampled).transform(sampled)
+    val sampled = scaled(
+      df.sample(withReplacement = false, sampleFraction, seed), featureColumns)
+    fitKMeans(sampled, k, seed).transform(sampled)
       .drop("features", "scaled_features")
   }
 

@@ -41,6 +41,11 @@ object EnergyPipeline {
   /** Stage 2 (`data_preprocessing.py:88-305`): clean (P1-P4), time features
     * (F2-F3), tariff dim join (J1, broadcast), hourly + daily rollups
     * (A1-A2). Returns (hourly, daily).
+    *
+    * Each reading gets only its `date` and `hour`; the rollups group by
+    * (LCLid, date, hour) and (LCLid, date), and `year`, `month`, `day` and
+    * `weekday`, functions of `date`, are derived once per output row after
+    * each rollup, in the reference's column order.
     */
   def preprocess(raw: DataFrame, tariffs: DataFrame): (DataFrame, DataFrame) = {
     val cleaned = Clean.dropNullKeys(raw, Seq("LCLid", "DateTime"))
@@ -49,12 +54,12 @@ object EnergyPipeline {
       .withColumn("energy_kwh", Clean.sentinelCast(col("energy_raw"), FloatType))
       .drop("energy_raw")
       .na.drop(Seq("energy_kwh"))
-    val timed = Clean.withTimeFeatures(cleaned, "DateTime")
-    val withTariff = Aggregate.dimJoin(timed, tariffs,
+      .withColumn("date", to_date(col("DateTime")))
+      .withColumn("hour", hour(col("DateTime")))
+    val withTariff = Aggregate.dimJoin(cleaned, tariffs,
       col("DateTime") === col("TariffDateTime")).drop("TariffDateTime")
     val hourly = withTariff
-      .groupBy(col("LCLid"), col("date"), col("hour"), col("year"),
-        col("month"), col("day"), col("weekday"))
+      .groupBy(col("LCLid"), col("date"), col("hour"))
       .agg(sum(col("energy_kwh")).as("hourly_energy_kwh"),
         avg(col("energy_kwh")).as("avg_half_hour_energy"),
         count(lit(1)).as("num_readings"),
@@ -62,13 +67,23 @@ object EnergyPipeline {
         // min is the deterministic equivalent on a per-hour-constant dim
         min(col("Tariff")).as("Tariff"))
     val daily = hourly
-      .groupBy(col("LCLid"), col("date"), col("year"), col("month"),
-        col("day"), col("weekday"))
+      .groupBy(col("LCLid"), col("date"))
       .agg(sum(col("hourly_energy_kwh")).as("daily_energy_kwh"),
         avg(col("hourly_energy_kwh")).as("avg_hourly_energy"),
         sum(col("num_readings")).as("total_readings"),
         min(col("Tariff")).as("Tariff"))
-    (hourly, daily)
+    (withCalendar(hourly, "hour"), withCalendar(daily, "date"))
+  }
+
+  /** `df` with `year`, `month`, `day` and `weekday` of its `date` inserted
+    * after the column `after`.
+    */
+  private def withCalendar(df: DataFrame, after: String): DataFrame = {
+    val calendar = Seq(year(col("date")).as("year"),
+      month(col("date")).as("month"), dayofmonth(col("date")).as("day"),
+      date_format(col("date"), "E").as("weekday"))
+    val (head, tail) = df.columns.splitAt(df.columns.indexOf(after) + 1)
+    df.select(head.toSeq.map(col) ++ calendar ++ tail.map(col): _*)
   }
 
   /** Stage 3 (`feature_engineering.py:41-249`): W1-W4 windows, P10-P12

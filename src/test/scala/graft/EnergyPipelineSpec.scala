@@ -93,6 +93,41 @@ class EnergyPipelineSpec extends SparkSpec {
     assert(mismatches == 0)
   }
 
+  test("preprocess: calendar columns derived after the rollups equal the " +
+    "7-key rollups, row for row") {
+    import graft.etl.{Aggregate, Clean}
+    // the rollups as preprocess ran them before: every reading carries its
+    // calendar columns (Clean.withTimeFeatures) and both rollups group by
+    // them
+    val raw = out("raw_energy_data")
+    val timed = Clean.withTimeFeatures(
+      Clean.dropNullKeys(raw, Seq("LCLid", "DateTime"))
+        .withColumnRenamed(EnergyPipeline.EnergyRaw, "energy_raw")
+        .withColumnRenamed("stdorToU", "tariff_type")
+        .withColumn("energy_kwh", Clean.sentinelCast(col("energy_raw"),
+          org.apache.spark.sql.types.FloatType))
+        .drop("energy_raw")
+        .na.drop(Seq("energy_kwh")), "DateTime")
+    val hourly = Aggregate.dimJoin(timed, tariffs,
+      col("DateTime") === col("TariffDateTime")).drop("TariffDateTime")
+      .groupBy("LCLid", "date", "hour", "year", "month", "day", "weekday")
+      .agg(sum("energy_kwh").as("hourly_energy_kwh"),
+        avg("energy_kwh").as("avg_half_hour_energy"),
+        count(lit(1)).as("num_readings"), min("Tariff").as("Tariff"))
+    val daily = hourly
+      .groupBy("LCLid", "date", "year", "month", "day", "weekday")
+      .agg(sum("hourly_energy_kwh").as("daily_energy_kwh"),
+        avg("hourly_energy_kwh").as("avg_hourly_energy"),
+        sum("num_readings").as("total_readings"), min("Tariff").as("Tariff"))
+    val (gotHourly, gotDaily) = EnergyPipeline.preprocess(raw, tariffs)
+    for ((name, got, want) <- Seq(("hourly", gotHourly, hourly),
+        ("daily", gotDaily, daily))) {
+      assert(got.schema == want.schema, name)
+      assert(got.count() == want.count(), name)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, name)
+    }
+  }
+
   test("tariff join: every reading hour gets a label; one-hots in features") {
     val hourly = out("hourly")
     assert(hourly.filter($"Tariff".isNull).count() == 0)

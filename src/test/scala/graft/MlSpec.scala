@@ -195,6 +195,17 @@ class MlSpec extends SparkSpec {
     assert(misses.isEmpty, misses.mkString("\n", "\n", ""))
   }
 
+  /** `body`'s result and the jobs it ran, from the engine's listener. */
+  private def jobsOf[A](body: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    val m = graft.tools.StageMetrics.attach(sc)
+    try {
+      val t0 = m.read()
+      val a = body
+      (a, (m.read() - t0).jobs)
+    } finally sc.removeSparkListener(m)
+  }
+
   test("job budget: Forecast.run(fastGrid = true) runs in 5 jobs") {
     // Measured twice at local[4]: the feature window's shuffle, the
     // feature cache's materialization, the Gram pass, the predictions
@@ -202,15 +213,9 @@ class MlSpec extends SparkSpec {
     // materializes in a job of its own). It was 30 with one MLlib fit and
     // evaluation job per grid point. Raise the budget only with a reason.
     daily.count()
-    val sc = spark.sparkContext
-    val m = graft.tools.StageMetrics.attach(sc)
-    try {
-      val t0 = m.read()
-      val (preds, _) = Forecast.run(daily, fastGrid = true)
-      val jobs = (m.read() - t0).jobs
-      preds.unpersist()
-      assert(jobs <= 5, s"Forecast.run(fastGrid = true) ran $jobs jobs")
-    } finally sc.removeSparkListener(m)
+    val ((preds, _), jobs) = jobsOf(Forecast.run(daily, fastGrid = true))
+    preds.unpersist()
+    assert(jobs <= 5, s"Forecast.run(fastGrid = true) ran $jobs jobs")
   }
 
   test("RF forecast: small grid trains and ranks importances") {
@@ -251,26 +256,149 @@ class MlSpec extends SparkSpec {
     f.unpersist()
   }
 
-  test("job budget: Anomaly.run runs in 20 jobs") {
-    // Measured twice at local[4], 20 both times: the scaler fit, KMeans'
-    // initialization and iterations, the materialization of the input and
-    // distance caches and of AQE's stages (a cached plan under AQE
-    // materializes in a job of its own), and the collect. It was 21 with
-    // a partition-sizing count and a count that only fed a phase timer.
-    // Raise the budget only with a reason.
+  test("job budget: Anomaly.run runs in 9 jobs") {
+    // Measured twice at local[4], 9 both times: the scaler fit, the one-job
+    // KMeans fit, the materialization of the input and distance caches and
+    // of AQE's stages (a cached plan under AQE materializes in a job of its
+    // own), and the collect. It was 20 when MLlib's KMeans.fit ran its
+    // initialization and each Lloyd iteration as jobs of their own, and 21
+    // with a partition-sizing count and a count that only fed a phase
+    // timer. Raise the budget only with a reason.
     daily.count()
     val (preds, _) = Forecast.run(daily, fastGrid = true)
-    val sc = spark.sparkContext
-    val m = graft.tools.StageMetrics.attach(sc)
     try {
-      val t0 = m.read()
-      Anomaly.run(daily, preds).collect()
-      val jobs = (m.read() - t0).jobs
-      assert(jobs <= 20, s"Anomaly.run ran $jobs jobs")
+      val (_, jobs) = jobsOf(Anomaly.run(daily, preds).collect())
+      assert(jobs <= 9, s"Anomaly.run ran $jobs jobs")
+    } finally preds.unpersist()
+  }
+
+  test("job budget: Anomaly.run on a perfbench-shaped input runs in 8 jobs") {
+    // One partition, as perfbench's daily table reads, and MLlib's KMeans
+    // runs all 20 iterations on it. Measured twice at local[4], 8 both
+    // times; MLlib's KMeans.fit made it 36. Raise the budget only with a
+    // reason.
+    val d = benchShaped(7, "2013-03-18").coalesce(1).cache()
+    d.count()
+    val (preds, _) = Forecast.run(d, fastGrid = true)
+    try {
+      val (_, jobs) = jobsOf(Anomaly.run(d, preds).collect())
+      assert(jobs <= 8, s"Anomaly.run ran $jobs jobs")
     } finally {
-      sc.removeSparkListener(m)
       preds.unpersist()
+      d.unpersist()
     }
+  }
+
+  /** `d`'s anomaly features (`d` ⋈ its fast-grid forecast), assembled and
+    * scaled as [[Anomaly.detect]] does, cached in one partition.
+    */
+  private def scaledAnomalyInput(d: DataFrame): DataFrame = {
+    val (preds, _) = Forecast.run(d, fastGrid = true)
+    val f = Anomaly.features(d.join(
+      preds.select("user_id", "date", "prediction"), Seq("user_id", "date")))
+    val out = Anomaly.scaled(f, Array("daily_value", "residual",
+      "day_of_week", "is_weekend")).coalesce(1).cache()
+    out.count()
+    preds.unpersist()
+    out
+  }
+
+  /** How [[Anomaly.fitKMeans]] on `f` misses MLlib's `KMeans.fit` on the
+    * same frame (centers and training cost bit for bit, iteration count,
+    * every row's cluster), and the jobs fitKMeans ran.
+    */
+  private def kmeansMisses(what: String, f: DataFrame, k: Int, seed: Long)
+      : (Seq[String], Long) = {
+    import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+    val ref = new KMeans().setK(k).setSeed(seed)
+      .setFeaturesCol("scaled_features").setPredictionCol("cluster").fit(f)
+    val (got, jobs) = jobsOf(Anomaly.fitKMeans(f, k, seed))
+    def bits(m: KMeansModel) = m.clusterCenters.toSeq
+      .map(_.toArray.toSeq.map(java.lang.Double.doubleToLongBits))
+    def clusters(m: KMeansModel) =
+      m.transform(f).select("cluster").collect().map(_.getInt(0)).toSeq
+    val at = s"$what, k=$k, seed=$seed"
+    val misses = Seq(
+      (bits(got) != bits(ref)) -> s"$at: centers ${got.clusterCenters
+        .mkString(" ")} vs ${ref.clusterCenters.mkString(" ")}",
+      (java.lang.Double.doubleToLongBits(got.summary.trainingCost) !=
+        java.lang.Double.doubleToLongBits(ref.summary.trainingCost)) ->
+        s"$at: cost ${got.summary.trainingCost} vs ${ref.summary.trainingCost}",
+      (got.summary.numIter != ref.summary.numIter) ->
+        s"$at: ${got.summary.numIter} vs ${ref.summary.numIter} iterations",
+      (clusters(got) != clusters(ref)) -> s"$at: row clusters differ"
+    ).collect { case (true, miss) => miss }
+    (misses, jobs)
+  }
+
+  test("KMeans on one partition: MLlib's model bit for bit, in 1 job") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    import spark.implicits._
+    def frame(vs: Seq[Vector]) = {
+      val f = vs.map(Tuple1(_)).toDF("scaled_features").coalesce(1).cache()
+      f.count()
+      f
+    }
+    val r = new scala.util.Random(3)
+    // bench seed 7 runs all 20 Lloyd iterations at k=5, seed 42
+    val anomalyInputs = Seq("daily" -> daily,
+      "bench seed 7" -> benchShaped(7, "2013-03-18"),
+      "bench seed 11" -> benchShaped(11, "2013-01-01"))
+      .map { case (n, d) => n -> scaledAnomalyInput(d) }
+    val edges = Seq(
+      // 3 distinct points: k-means‖ keeps ≤ k candidates, no k-means++
+      "3 distinct points" -> frame(Seq.tabulate(10)(i =>
+        Vectors.dense(i % 3, 1.0, -(i % 3), 2.0))),
+      "duplicate-heavy" -> frame(Seq.tabulate(200)(i =>
+        if (i % 10 == 0) Vectors.dense(Array.fill(4)(r.nextGaussian()))
+        else Vectors.dense(i % 6, (i % 6) * 0.5, 1.0, 0.0))),
+      // one feature, so the row path: takeSample's collect-and-shuffle
+      "single row" -> frame(Seq(Vectors.dense(2.5))))
+    val misses = scala.collection.mutable.ArrayBuffer[String]()
+    for ((name, f) <- anomalyInputs ++ edges; k <- Seq(2, 5);
+         seed <- Seq(42L, 1L)) {
+      val (m, jobs) = kmeansMisses(name, f, k, seed)
+      misses ++= m
+      if (jobs != 1) misses += s"$name, k=$k, seed=$seed: $jobs jobs"
+    }
+    // fewer rows than features: ml's `auto` solver picks its block solver
+    // there, so the fit is MLlib's own
+    val (m, jobs) = kmeansMisses("3 rows of 4 features", frame(Seq(
+      Vectors.dense(1.0, 2.0, 3.0, 4.0), Vectors.dense(0.0, 2.0, 3.0, 4.0),
+      Vectors.dense(1.0, 5.0, 3.0, 4.0))), 2, 42L)
+    misses ++= m
+    if (jobs <= 1) misses += s"3 rows of 4 features: $jobs jobs"
+    (anomalyInputs ++ edges).foreach(_._2.unpersist())
+    assert(misses.isEmpty, misses.mkString("\n", "\n", ""))
+  }
+
+  test("KMeans on several partitions or none is MLlib's fit") {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.linalg.Vector
+    import spark.implicits._
+    val one = scaledAnomalyInput(benchShaped(7, "2013-03-18"))
+    val three = one.repartition(3).cache()
+    three.count()
+    val km = new KMeans().setK(5).setSeed(42L)
+      .setFeaturesCol("scaled_features").setPredictionCol("cluster")
+    val ref = km.fit(three)
+    val (got, jobs) = jobsOf(Anomaly.fitKMeans(three, 5, 42L))
+    assert(jobs > 1, s"$jobs jobs")
+    // over several partitions MLlib sums the cost in task completion order
+    assert(got.clusterCenters.toSeq == ref.clusterCenters.toSeq)
+    assert(got.summary.numIter == ref.summary.numIter)
+    assert(math.abs(got.summary.trainingCost - ref.summary.trainingCost) <=
+      1e-12 * ref.summary.trainingCost)
+    Seq(one, three).foreach(_.unpersist())
+    // an empty frame fails as MLlib fails: ml's `auto` solver summarizes
+    // the input before any k-means step
+    val empty = Seq.empty[Tuple1[Vector]].toDF("scaled_features").coalesce(1)
+    def root(t: Throwable): Throwable =
+      if (t.getCause == null) t else root(t.getCause)
+    val want = root(intercept[Exception](km.fit(empty)))
+    val fail = root(intercept[Exception](Anomaly.fitKMeans(empty, 5, 42L)))
+    assert(fail.getClass == want.getClass &&
+      fail.getMessage == want.getMessage, s"$fail vs $want")
   }
 
   test("anomaly: clusters in range, rate bounded, deterministic with seed") {
