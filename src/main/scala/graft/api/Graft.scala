@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{AnnIndex, Bpe, CacheScope, Dedup, NbClassifier, Packing, Ranks, Sampling, Similarity, TextAnalysis}
+import graft.io.StateDir
 
 /** The public façade: one short, defaulted call per engine capability, so a
   * user does not need to know the `graft.ext.*` operator internals or their
@@ -1066,34 +1067,18 @@ object Graft {
     * NB/tokenizer/AnnIndex convention). */
   private val CorpusStateFormatVersion = 1
 
-  private def stateFs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Committed version directories under `dir`, newest first — a version
     * counts only if its `meta/` (the COMMIT MARKER, written last) is
     * readable and matches `kind` + format_version.
     */
   private def committedVersions(spark: SparkSession, dir: String,
                                 kind: String): Seq[Long] = {
-    val (fs, p) = stateFs(spark, dir)
-    if (!fs.exists(p)) Nil
-    else {
-      val vRe = "v=(\\d+)".r
-      fs.listStatus(p).toSeq
-        .flatMap(_.getPath.getName match {
-          case vRe(n) => Some(n.toLong)
-          case _ => None
-        })
-        .sorted.reverse
-        .filter { v =>
-          try {
-            val m = spark.read.parquet(s"$dir/v=$v/meta").head()
-            m.getAs[Int]("format_version") == CorpusStateFormatVersion &&
-              m.getAs[String]("kind") == kind
-          } catch { case scala.util.control.NonFatal(_) => false }
-        }
+    StateDir.versions(StateDir.fs(spark, dir), dir).reverse.filter { v =>
+      try {
+        val m = spark.read.parquet(s"$dir/v=$v/meta").head()
+        m.getAs[Int]("format_version") == CorpusStateFormatVersion &&
+          m.getAs[String]("kind") == kind
+      } catch { case scala.util.control.NonFatal(_) => false }
     }
   }
 
@@ -1151,8 +1136,7 @@ object Graft {
                              bucketCols: Map[String, String] =
                                Map("keepers" -> "content_hash")): Unit = {
     import spark.implicits._
-    val next = committedVersions(spark, dir, kind).headOption
-      .getOrElse(-1L) + 1
+    val next = StateDir.nextSlot(committedVersions(spark, dir, kind))
     val vDir = s"$dir/v=$next"
     parts.foreach { case (name, df) =>
       if (bucketBy > 0 && bucketCols.contains(name)) {
@@ -1178,15 +1162,14 @@ object Graft {
       .toDF("format_version", "kind", "keepers_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$vDir/meta")
     // retention: the loop only ever reads the newest committed version;
-    // keep 3 for operator forensics, exactly like the streaming states.
-    // Pruned versions also drop their catalog entries (external tables —
-    // the DROP leaves files to the fs delete).
-    val (fs, _) = stateFs(spark, dir)
-    committedVersions(spark, dir, kind).drop(3).foreach { v =>
-      Seq("keepers", "keeperkeys").foreach(part => spark.sql(
-        s"DROP TABLE IF EXISTS `${stateTableName(s"$dir/v=$v/$part")}`"))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true)
-    }
+    // keep StateDir.Retained for operator forensics, exactly like the
+    // streaming states. Pruned versions also drop their catalog entries
+    // (external tables — the DROP leaves files to the fs delete).
+    val pruned = committedVersions(spark, dir, kind).drop(StateDir.Retained)
+    pruned.foreach(v => Seq("keepers", "keeperkeys").foreach(part =>
+      spark.sql(
+        s"DROP TABLE IF EXISTS `${stateTableName(s"$dir/v=$v/$part")}`")))
+    StateDir.delete(StateDir.fs(spark, dir), dir, pruned)
   }
 
   private def loadStateParts(spark: SparkSession, dir: String, kind: String,
@@ -1298,7 +1281,7 @@ object Graft {
       Seq("keepers", "shards"))
     val v = committedVersions(spark, dir, "corpus_rekeyed").head
     val kkPath = s"$dir/v=$v/keeperkeys"
-    val (fs, _) = stateFs(spark, kkPath)
+    val fs = StateDir.fs(spark, kkPath)
     val keyIndex =
       if (!fs.exists(new org.apache.hadoop.fs.Path(kkPath))) None
       else {
@@ -1754,7 +1737,7 @@ object Graft {
       : Long = {
     import spark.implicits._
     val feedRoot = s"$corpusOutDir/superseded"
-    val (fs, _) = stateFs(spark, feedRoot)
+    val fs = StateDir.fs(spark, feedRoot)
     // COMMITTED data-carrying dirs only ([[graft.streaming.StreamingCorpus.feedBatchDirs]]
     // — publisher marker / _SUCCESS / a newer dir exists): folding an
     // uncommitted dir would archive a PARTIAL batch and then delete it —
@@ -1770,28 +1753,17 @@ object Graft {
       .parquet(candidates.map(_._2): _*)
       .withColumn("batch_id", col("batch_id").cast("long"))
     val archDir = s"$corpusOutDir/superseded_archive"
-    val (afs, archPath) = stateFs(spark, archDir)
-    val vRe = "v=(\\d+)".r
-    def versions: Seq[Long] =
-      if (!afs.exists(archPath)) Nil
-      else afs.listStatus(archPath).toSeq.flatMap(_.getPath.getName match {
-        case vRe(n) => Some(n.toLong)
-        case _ => None
-      }).sorted
+    val afs = StateDir.fs(spark, archDir)
     // a snapshot is committed by its OWN marker (stamped LAST since r18)
     // or _SUCCESS (pre-r18 archives) — part-file presence reads a TORN
     // multi-file snapshot as committed, and carrying from a partial
     // snapshot permanently drops the history rows that landed in its
     // missing part files (ADVICE r17, medium)
-    def isCommitted(v: Long): Boolean =
-      graft.streaming.StreamingIndex.keymapCommitted(afs,
-        new org.apache.hadoop.fs.Path(s"$archDir/v=$v"))
-    def hasData(v: Long): Boolean =
-      afs.listStatus(new org.apache.hadoop.fs.Path(s"$archDir/v=$v"))
-        .exists(st => st.getPath.getName.startsWith("part-") &&
-          st.getLen > 0)
-    val allVersions = versions
-    val committed = allVersions.filter(v => isCommitted(v) && hasData(v))
+    val allVersions = StateDir.versions(afs, archDir)
+    val committed = allVersions.filter { v =>
+      val vd = s"$archDir/v=$v"
+      StateDir.committed(afs, vd) && StateDir.hasData(afs, vd)
+    }
     // an UNMARKED data-carrying version NEWER than every committed one
     // (or with no committed one anywhere) is ambiguous: the in-protocol
     // case is a crashed compact (its deletes never ran, so its content
@@ -1818,21 +1790,19 @@ object Graft {
     // newest version + 1 (committed or torn): a torn slot is never
     // overwritten — readers ignore it, and writing ABOVE it means a
     // retry can never destroy rows a concurrent reader might still
-    // salvage by hand-stamping; pruneVersions retires it with age
-    val next = allVersions.lastOption.map(_ + 1).getOrElse(0L)
+    // salvage by hand-stamping; StateDir.prune retires it with age
+    val next = StateDir.nextSlot(allVersions)
     merged.write.mode("overwrite").parquet(s"$archDir/v=$next")
     // the snapshot's OWN commit marker, written LAST, BEFORE any delete:
     // the deletes below are the point of no return, so the snapshot must
     // be provably complete first
-    val mk = new org.apache.hadoop.fs.Path(s"$archDir/v=$next/" +
-      graft.streaming.StreamingIndex.KeymapCommitMarker)
-    afs.create(mk, true).close()
+    StateDir.stamp(afs, s"$archDir/v=$next", StateDir.CommitMarker)
     // deletes strictly AFTER the snapshot committed; then retention on
     // the archive versions themselves (only the newest is ever read)
     candidates.foreach { case (_, dir) =>
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     }
-    graft.streaming.StreamingCorpus.pruneVersions(spark, archDir)
+    StateDir.prune(afs, archDir)
     candidates.size.toLong
   }
 
@@ -1850,7 +1820,7 @@ object Graft {
     */
   def corpusFeedRegisterConsumer(spark: SparkSession, corpusOutDir: String,
                                  indexDir: String): Unit = {
-    val (fs, _) = stateFs(spark, corpusOutDir)
+    val fs = StateDir.fs(spark, corpusOutDir)
     val reg = new org.apache.hadoop.fs.Path(
       s"$corpusOutDir/feedconsumers/" + org.apache.commons.codec.digest
         .DigestUtils.md5Hex(indexDir))
@@ -1867,7 +1837,7 @@ object Graft {
   def corpusFeedUnregisterConsumer(spark: SparkSession,
                                    corpusOutDir: String,
                                    indexDir: String): Unit = {
-    val (fs, _) = stateFs(spark, corpusOutDir)
+    val fs = StateDir.fs(spark, corpusOutDir)
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$corpusOutDir/feedconsumers/" + org.apache.commons.codec.digest
         .DigestUtils.md5Hex(indexDir)), false)
@@ -1878,19 +1848,12 @@ object Graft {
     * hash-arbitrary; sorted for determinism). */
   private def feedConsumers(spark: SparkSession,
                             corpusOutDir: String): Seq[String] = {
-    val (fs, p) = stateFs(spark, s"$corpusOutDir/feedconsumers")
+    val dir = s"$corpusOutDir/feedconsumers"
+    val fs = StateDir.fs(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
     if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map { st =>
-      val in = fs.open(st.getPath)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](4096)
-        Iterator.continually(in.read(tmp)).takeWhile(_ >= 0)
-          .foreach(n => buf.write(tmp, 0, n))
-        new String(buf.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      } finally in.close()
-    }.sorted
+    else fs.listStatus(p).toSeq.map(st => StateDir.read(fs, st.getPath).trim)
+      .sorted
   }
 
   /** Registered consumers whose applied-through cursor lags the newest
@@ -1907,7 +1870,7 @@ object Graft {
                                   corpusOutDir: String,
                                   warnLagBatches: Long)
       : Seq[(String, Long, Long)] = {
-    val (fs, _) = stateFs(spark, corpusOutDir)
+    val fs = StateDir.fs(spark, corpusOutDir)
     val maxPublished = graft.streaming.StreamingCorpus
       .feedBatchDirs(fs, s"$corpusOutDir/superseded")
       .filter(_._3).map(_._1).maxOption.getOrElse(-1L)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
+import graft.io.StateDir
+
 /** Persisted ANN index: build once from a corpus, serve queries many
   * times without re-learning anything — the deployment lifecycle the
   * live [[Similarity.ivfPqResSearch]] operator folds into one plan.
@@ -90,33 +92,25 @@ object AnnIndex {
   private[graft] val WriterMarker = "_WRITER"
 
   /** Run `body` holding the index's single-writer lock: `dir/_WRITER`
-    * is created atomically (create with overwrite = false — the same
-    * primitive the streaming `_OWNER` lock races on) and deleted in a
-    * finally. A concurrent mutator — or the stale marker of a crashed
-    * one — fails fast with instructions instead of interleaving writes.
+    * is created atomically ([[graft.io.StateDir.createExclusive]] — the
+    * same primitive the streaming `_OWNER` lock races on), holding `op`,
+    * and deleted in a finally. A concurrent mutator — or the stale marker
+    * of a crashed one — fails fast with instructions instead of
+    * interleaving writes.
     */
   private def withWriterLock[T](spark: SparkSession, dir: String,
                                 op: String)(body: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(s"$dir/$WriterMarker")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(lock.getParent)
-    val out =
-      try fs.create(lock, false)
-      catch {
-        case _: java.io.IOException =>
-          throw new IllegalStateException(
-            s"AnnIndex.$op: $dir is being mutated by another writer " +
-              s"($dir/$WriterMarker exists) — add/supersede/rebuild are " +
-              "single-writer (concurrent mutation silently loses rows " +
-              "across a rebuild's version swap). If the other writer " +
-              "crashed and is confirmed dead, delete the marker to " +
-              "take over")
-      }
-    try {
-      out.write(op.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-      body
-    } finally fs.delete(lock, false)
+    val fs = StateDir.fs(spark, dir)
+    if (!StateDir.createExclusive(fs, lock, op))
+      throw new IllegalStateException(
+        s"AnnIndex.$op: $dir is being mutated by another writer " +
+          s"($dir/$WriterMarker exists) — add/supersede/rebuild are " +
+          "single-writer (concurrent mutation silently loses rows " +
+          "across a rebuild's version swap). If the other writer " +
+          "crashed and is confirmed dead, delete the marker to " +
+          "take over")
+    try body finally fs.delete(lock, false)
   }
 
   /** The tombstoned uids of the current version, when any exist —
@@ -148,13 +142,11 @@ object AnnIndex {
     // Committed task output is exactly the part files; supersede only
     // ever writes non-empty frames, so data present = part files
     // present.
-    val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = s"$root/tombstones"
+    val fs = StateDir.fs(spark, dir)
     val bytes =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).iterator
-        .filter(st => st.getPath.getName.startsWith("part-"))
-        .map(_.getLen).sum
+      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) 0L
+      else StateDir.partFiles(fs, dir).map(_.getLen).sum
     if (bytes > 0)
       Some((spark.read.parquet(s"$root/tombstones").distinct(), bytes))
     else None
@@ -194,12 +186,9 @@ object AnnIndex {
                                      left: DataFrame): DataFrame =
     readTombstonesSized(spark, root) match {
       case Some((tomb, _)) =>
-        val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val dir = s"$root/tombstones"
         val conf = spark.sparkContext.hadoopConfiguration
-        val rows = fs.listStatus(p).iterator
-          .filter(st => st.getPath.getName.startsWith("part-") &&
-            st.getLen > 0)
+        val rows = StateDir.partFiles(StateDir.fs(spark, dir), dir)
           .map { st =>
             val in = org.apache.parquet.hadoop.ParquetFileReader.open(
               org.apache.parquet.hadoop.util.HadoopInputFile
@@ -450,28 +439,16 @@ object AnnIndex {
     * call: a [[rebuild]] completing mid-call does not tear artifacts
     * from two versions into one plan.
     */
-  private[graft] def currentRoot(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) dir
-    else {
-      val vRe = "r=(\\d+)".r
-      fs.listStatus(p).toSeq
-        .flatMap(_.getPath.getName match {
-          case vRe(n) => Some(n.toLong)
-          case _ => None
-        })
-        .sorted.reverse
-        .collectFirst(Function.unlift { v =>
-          val root = s"$dir/r=$v"
-          try {
-            spark.read.parquet(s"$root/params").head()
-            Some(root)
-          } catch { case scala.util.control.NonFatal(_) => None }
-        })
-        .getOrElse(dir)
-    }
-  }
+  private[graft] def currentRoot(spark: SparkSession, dir: String): String =
+    StateDir.versions(StateDir.fs(spark, dir), dir, "r").reverse
+      .collectFirst(Function.unlift { v =>
+        val root = s"$dir/r=$v"
+        try {
+          spark.read.parquet(s"$root/params").head()
+          Some(root)
+        } catch { case scala.util.control.NonFatal(_) => None }
+      })
+      .getOrElse(dir)
 
   /** REBUILD the index over everything it currently holds — the loop
     * [[stats]]' `added_fraction` alert points at and [[add]]'s staleness
@@ -527,15 +504,10 @@ object AnnIndex {
       }
     val bucketed = Similarity.kmeansBuckets(vecs, "uid", "uvec", k = k,
       iters = iters, bucketCol = "__cell", trainFraction = trainFraction)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vRe = "r=(\\d+)".r
-    def versions: Seq[Long] = fs.listStatus(p).toSeq
-      .flatMap(_.getPath.getName match {
-        case vRe(n) => Some(n.toLong)
-        case _ => None
-      }).sorted
-    val next = versions.lastOption.getOrElse(0L) + 1
+    val fs = StateDir.fs(spark, dir)
+    def versions = StateDir.versions(fs, dir, "r")
+    // r=0 is never written: the flat layout under `dir` is the first version
+    val next = math.max(1L, StateDir.nextSlot(versions))
     build(bucketed, "uid", "uvec", "__cell", s"$dir/r=$next", dim = dim,
       m = m, kSub = kSub, iters = pqIters, trainFraction = trainFraction)
     // retention: keep the NEW version and the COMMITTED predecessor the

@@ -51,14 +51,17 @@ object Anomaly {
     prep.transform(df)
   }
 
-  /** MLlib's `KMeans(k, seed)` fit on `scaled`. An input of one partition
-    * is fit in one job ([[KMeansFit]]); MLlib's `KMeans.fit` would run
-    * each of its ~28 passes as a job of one task. Any other input goes to
-    * `KMeans.fit`, whose per-partition sampling and merges one task cannot
-    * replay. Both give MLlib's model, bit for bit.
+  /** MLlib's `KMeans(k, seed)` with the row solver, fit on `scaled`. An
+    * input of one partition is fit in one job ([[KMeansFit]]); MLlib's
+    * `KMeans.fit` would run each of its ~28 passes as a job of one task.
+    * Any other input goes to `KMeans.fit`, whose per-partition sampling and
+    * merges one task cannot replay. Both give MLlib's model, bit for bit.
+    * The row solver is the one ml's `auto` picks on every input with at
+    * least as many rows as features; below that `auto` picks the block
+    * solver, which fails on such inputs.
     */
   def fitKMeans(scaled: DataFrame, k: Int, seed: Long): KMeansModel = {
-    val km = new KMeans().setK(k).setSeed(seed)
+    val km = new KMeans().setK(k).setSeed(seed).setSolver("row")
       .setFeaturesCol("scaled_features").setPredictionCol("cluster")
     KMeansFit.oneTask(km, scaled).getOrElse(km.fit(scaled))
   }

@@ -24,7 +24,7 @@ object KMeansBridge {
   /** The MLlib model `KMeans.runWithWeight` fits on `rows` (vector, weight)
     * with these parameters and k-means‖ init, fitted in one job; `None`
     * when `rows` is not one partition or is a case MLlib fits differently
-    * (ml's block solver, center statistics computed in jobs), so the caller
+    * (an empty input, center statistics computed in jobs), so the caller
     * runs MLlib.
     */
   def fit(rows: RDD[(Vector, Double)], k: Int, maxIter: Int, steps: Int,
@@ -48,12 +48,10 @@ object KMeansBridge {
       : Option[(Array[Vector], Double, Int)] = {
     val n = points.length
     val d = if (n == 0) 0 else points(0).vector.size
-    // an empty input fails in MLlib; ml.KMeans' `auto` solver picks its
-    // block solver when the sum of the feature indices is at least n·d/2,
-    // which n >= d rules out; and from k²·d = 1e6 MLlib computes the center
-    // statistics in jobs of their own
-    if (n == 0 || n < d ||
-        !DistanceMeasure.shouldComputeStatisticsLocally(k, d)) return None
+    // an empty input fails in MLlib; and from k²·d = 1e6 MLlib computes the
+    // center statistics in jobs of their own
+    if (n == 0 || !DistanceMeasure.shouldComputeStatisticsLocally(k, d))
+      return None
 
     // initKMeansParallel: the first center by takeSample(false, 1, s)
     val s = new XORShiftRandom(seed).nextInt()
@@ -153,13 +151,14 @@ import org.apache.spark.sql.{Dataset, Row}
 object KMeansFit {
 
   /** The model `km.fit(dataset)` returns, fitted in one job, or `None` when
-    * [[KMeansBridge]] does not cover the input. The model has the
-    * estimator's uid, parent, set params and training summary; the cluster
-    * sizes `fit` counts only to log them are not counted.
+    * [[KMeansBridge]] does not cover the input or `km` is not a k-means‖
+    * estimator with the row solver. The model has the estimator's uid,
+    * parent, set params and training summary; the cluster sizes `fit`
+    * counts only to log them are not counted.
     */
   def oneTask(km: KMeans, dataset: Dataset[_]): Option[KMeansModel] = {
     if (km.getInitMode != KMeans.K_MEANS_PARALLEL ||
-        km.getSolver == KMeans.BLOCK) return None
+        km.getSolver != KMeans.ROW) return None
     // the rows trainWithRow reads, with its NaN and weight checks
     val rows = dataset.select(
       DatasetUtils.checkNonNanVectors(

@@ -692,9 +692,8 @@ object CorpusQueries {
         def publish(i: Int): Unit = states(i).superseded.foreach { sup =>
           sup.write.mode("overwrite")
             .parquet(s"$work/corpus/superseded/batch_id=$i")
-          fs.create(new org.apache.hadoop.fs.Path(
-            s"$work/corpus/superseded/batch_id=$i/" +
-              SI.KeymapCommitMarker), true).close()
+          graft.io.StateDir.stamp(fs, s"$work/corpus/superseded/batch_id=$i",
+            graft.io.StateDir.CommitMarker)
         }
         publish(0); publish(1)
         SI.applySupersessionFeed(s, s"$work/corpus", s"$work/idx")

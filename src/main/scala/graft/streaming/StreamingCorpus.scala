@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ext.{Bpe, CacheScope, NbClassifier, Packing, TextAnalysis}
+import graft.io.StateDir
 
 /** Streaming corpus-quality gating: documents land continuously (the
   * crawl-ingest shape — a fetcher emits pages as they arrive, and the
@@ -145,26 +146,15 @@ object StreamingCorpus {
   /** Latest committed shard-writer state under `dir` (see [[runShards]]):
     * the highest `v=<batchId>` version strictly below `beforeBatch`
     * (Long.MaxValue = just give me the newest, the flush-time call).
-    * Returns None before the first batch commits.
+    * Returns None before the first batch commits. No marker or data
+    * test applies: the newest listed version is read.
     */
   private[graft] def latestShardState(spark: SparkSession, dir: String,
                                       beforeBatch: Long = Long.MaxValue)
-      : Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else {
-      val vRe = "v=(\\d+)".r
-      val versions = fs.listStatus(path).toSeq
-        .flatMap(_.getPath.getName match {
-          case vRe(n) => Some(n.toLong)
-          case _ => None
-        })
-        .filter(_ < beforeBatch)
-      versions.sorted.lastOption
-        .map(v => spark.read.parquet(s"$dir/v=$v"))
-    }
-  }
+      : Option[DataFrame] =
+    StateDir.versions(StateDir.fs(spark, dir), dir)
+      .filter(_ < beforeBatch).lastOption
+      .map(v => spark.read.parquet(s"$dir/v=$v"))
 
   /** The terminal-sink marker [[closeShards]] writes under the shards
     * directory (underscore-prefixed: parquet partition discovery ignores
@@ -184,9 +174,7 @@ object StreamingCorpus {
     * tails re-enter through the carried writer state as if never flushed.
     */
   private def requireNotClosed(spark: SparkSession, shardDir: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$shardDir/$CloseMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker))
+    if (StateDir.marked(StateDir.fs(spark, shardDir), shardDir, CloseMarker))
       throw new IllegalStateException(
         s"graft shard sink $shardDir was CLOSED by closeShards — the " +
           "sink is terminal: its partial tails are already published as " +
@@ -224,7 +212,7 @@ object StreamingCorpus {
     // batch is ever read again (a retry re-reads it; nothing reads
     // further back) — without pruning, a long-running stream accumulates
     // one streams-bounded state dir per micro-batch forever
-    pruneVersions(spark, stateDir)
+    StateDir.prune(StateDir.fs(spark, stateDir), stateDir)
   }
 
   /** End-to-end STREAMING SHARD PRODUCTION — the terminal form of the
@@ -349,10 +337,8 @@ object StreamingCorpus {
       .parquet(s"$outDir/shards/batch_id=$FlushBatchId")
     // marker LAST: a crash before this line leaves a re-closeable sink
     // (the flush partition is overwrite-mode), never a half-fenced one
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$outDir/shards/$CloseMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
+    StateDir.stamp(StateDir.fs(spark, outDir), s"$outDir/shards",
+      CloseMarker)
     spark.read.parquet(s"$outDir/shards/batch_id=$FlushBatchId")
   }
 
@@ -394,16 +380,15 @@ object StreamingCorpus {
     // the dedup construction and reads are a plain union — no flips,
     // no latest-wins). The full-set rewrite this replaces scaled with
     // the corpus, not the delta.
+    val fs = StateDir.fs(spark, outDir)
     deltaKeepers.select(col("content_hash"))
       .write.mode("overwrite").parquet(s"$outDir/keepers/v=$batchId")
-    val segMk = new org.apache.hadoop.fs.Path(
-      s"$outDir/keepers/v=$batchId/$KeeperSegmentMarker")
-    segMk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(segMk, true).close()
+    StateDir.stamp(fs, s"$outDir/keepers/v=$batchId",
+      StateDir.SegmentMarker)
     newShardState.write.mode("overwrite")
       .parquet(s"$outDir/state/v=$batchId")
     // keepers dir: segments are live until the fold — never pruned
-    pruneVersions(spark, s"$outDir/state")
+    StateDir.prune(fs, s"$outDir/state")
     if (keeperFoldEveryBatches > 0 &&
         (batchId + 1) % keeperFoldEveryBatches == 0)
       foldDigestKeeperState(spark, outDir, includeNewest = false)
@@ -470,7 +455,7 @@ object StreamingCorpus {
     import spark.implicits._
     Seq(nextBase).toDF("next_base").coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/ingest/v=$batchId")
-    pruneVersions(spark, s"$outDir/ingest")
+    StateDir.prune(StateDir.fs(spark, outDir), s"$outDir/ingest")
   }
 
   /** Single-producer ownership of a keyed shard sink, ENFORCED: the
@@ -489,42 +474,21 @@ object StreamingCorpus {
   private[graft] def acquireProducerLock(spark: SparkSession, dir: String,
                                          checkpoint: String): Unit = {
     val lock = new org.apache.hadoop.fs.Path(s"$dir/_OWNER")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def owner(): String = {
-      val in = fs.open(lock)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](4096)
-        Iterator.continually(in.read(tmp)).takeWhile(_ >= 0)
-          .foreach(n => buf.write(tmp, 0, n))
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    }
-    def refuse(existing: String): Nothing =
-      throw new IllegalStateException(
+    val fs = StateDir.fs(spark, dir)
+    def requireOwner(): Unit = {
+      val existing = StateDir.read(fs, lock)
+      if (existing != checkpoint) throw new IllegalStateException(
         s"graft keyed shard sink: $dir is owned by another producer " +
           s"(checkpoint '$existing'); this starter's checkpoint is " +
           s"'$checkpoint'. The keyed loop's ingest-base versioning " +
           "requires exactly one producer per outDir — two would assign " +
           "overlapping ingest ids. If the owning job is dead and being " +
           s"replaced, delete $dir/_OWNER to take over")
-    if (fs.exists(lock)) {
-      val existing = owner()
-      if (existing != checkpoint) refuse(existing)
-    } else {
-      fs.mkdirs(lock.getParent)
-      try {
-        val out = fs.create(lock, false) // atomic: loses a concurrent race
-        out.write(checkpoint.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-      } catch {
-        case _: java.io.IOException =>
-          // raced: someone created it first — same identity is fine
-          val existing = owner()
-          if (existing != checkpoint) refuse(existing)
-      }
     }
+    // a lost create race means someone created it first — same identity
+    // is fine
+    if (fs.exists(lock) || !StateDir.createExclusive(fs, lock, checkpoint))
+      requireOwner()
   }
 
   /** [[runCorpusShards]] for ARBITRARY-keyed documents — the crawl shape
@@ -585,7 +549,7 @@ object StreamingCorpus {
     *  - `keepers/v=B` — the batch's NEW rows (accepted + dropped; ids
     *    are monotone under the versioned ingest base, so the batch's
     *    rows are exactly `ingest_id > base`), committed by a
-    *    [[KeeperSegmentMarker]] written LAST;
+    *    [[graft.io.StateDir.SegmentMarker]] written LAST;
     *  - `keeperflips/v=B` — the retired ingest ids (the LatestWins
     *    flip's one in-place mutation, expressed as delta-sized override
     *    events — the same ids the supersession feed publishes);
@@ -606,28 +570,15 @@ object StreamingCorpus {
     * base at its newest version's watermark, so existing deployments
     * migrate seamlessly: the first segmented batch simply stacks above
     * it and the first fold retires it into the sidecar.
+    *
+    * A keeper-family version counts as marked by its own marker ONLY
+    * (segments by the segment marker, sidecar bases by
+    * [[graft.io.StateDir.CommitMarker]]) — no `_SUCCESS` fallback.
     */
-  private[graft] val KeeperSegmentMarker = "_GRAFT_SEGMENT"
-
-  /** List `dir`'s `v=<n>` children as (version, marked, hasData). */
   private def keeperVersions(fs: org.apache.hadoop.fs.FileSystem,
                              dir: String, marker: String)
-      : Seq[(Long, Boolean, Boolean)] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val vRe = "v=(\\d+)".r
-    if (!fs.exists(path)) Nil
-    else fs.listStatus(path).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case vRe(n) =>
-          val hasData = fs.listStatus(st.getPath).exists(f =>
-            f.getPath.getName.startsWith("part-") && f.getLen > 0)
-          val marked = fs.exists(
-            new org.apache.hadoop.fs.Path(st.getPath, marker))
-          Some((n.toLong, marked, hasData))
-        case _ => None
-      }
-    }.sortBy(_._1)
-  }
+      : Seq[(Long, Boolean, Boolean)] =
+    StateDir.scan(fs, dir, StateDir.marked(fs, _, marker))
 
   /** The newest committed keeper BASE: the `keepersbase` sidecar's
     * newest marked version (marker content = the segment watermark it
@@ -641,20 +592,11 @@ object StreamingCorpus {
                                outDir: String, beforeBatch: Long)
       : Option[(String, Long, Long)] = {
     val baseDir = s"$outDir/keepersbase"
-    val sidecar = keeperVersions(fs, baseDir, StreamingIndex
-        .KeymapCommitMarker).reverse
-      .collectFirst(Function.unlift {
+    val sidecar = keeperVersions(fs, baseDir, StateDir.CommitMarker)
+      .reverse.collectFirst(Function.unlift {
         case (v, true, true) =>
-          scala.util.Try {
-            val in = fs.open(new org.apache.hadoop.fs.Path(
-              s"$baseDir/v=$v/" + StreamingIndex.KeymapCommitMarker))
-            try {
-              val buf = new Array[Byte](64)
-              val n = in.read(buf)
-              new String(buf, 0, math.max(n, 0),
-                java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-            } finally in.close()
-          }.toOption.map(t => (s"$baseDir/v=$v", t, v))
+          StateDir.watermark(fs, s"$baseDir/v=$v")
+            .map(t => (s"$baseDir/v=$v", t, v))
         case _ => None
       })
     sidecar.orElse {
@@ -662,7 +604,7 @@ object StreamingCorpus {
       // marked segment — an unmarked dir ABOVE a marked one is a torn
       // segment (crash before its marker), which must read as absent,
       // never as a complete-history base
-      val vs = keeperVersions(fs, s"$outDir/keepers", KeeperSegmentMarker)
+      val vs = keeperVersions(fs, s"$outDir/keepers", StateDir.SegmentMarker)
       val firstMarked = vs.collectFirst { case (v, true, _) => v }
         .getOrElse(Long.MaxValue)
       vs.filter(v => !v._2 && v._3 && v._1 < beforeBatch &&
@@ -682,11 +624,10 @@ object StreamingCorpus {
                                             beforeBatch: Long =
                                               Long.MaxValue)
       : Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, outDir)
     val base = newestKeeperBase(spark, fs, outDir, beforeBatch)
     val through = base.map(_._2).getOrElse(-1L)
-    val segs = keeperVersions(fs, s"$outDir/keepers", KeeperSegmentMarker)
+    val segs = keeperVersions(fs, s"$outDir/keepers", StateDir.SegmentMarker)
       .filter(v => v._2 && v._3 && v._1 > through && v._1 < beforeBatch)
     val parts = base.map(_._1).toSeq ++
       segs.map(v => s"$outDir/keepers/v=${v._1}")
@@ -713,10 +654,10 @@ object StreamingCorpus {
       // flips-and-replacements-committed-together signal; the retry of
       // the torn batch overwrites both.
       val markedVs = keeperVersions(fs, s"$outDir/keepers",
-          KeeperSegmentMarker)
+          StateDir.SegmentMarker)
         .filter(v => v._2 && v._1 > through && v._1 < beforeBatch)
         .map(_._1).toSet
-      val flips = keeperVersions(fs, s"$outDir/keeperflips", "__none")
+      val flips = StateDir.scan(fs, s"$outDir/keeperflips", _ => false)
         .filter(v => v._3 && v._1 > through && v._1 < beforeBatch &&
           markedVs.contains(v._1))
         .map(v => spark.read.parquet(s"$outDir/keeperflips/v=${v._1}")
@@ -774,12 +715,12 @@ object StreamingCorpus {
   private def foldKeeperLog(spark: SparkSession, outDir: String,
                             includeNewest: Boolean)
                            (compactor: DataFrame => DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, outDir)
     val baseDir = s"$outDir/keepersbase"
+    val segDirs = Seq(s"$outDir/keepers", s"$outDir/keeperflips")
     val base = newestKeeperBase(spark, fs, outDir, Long.MaxValue)
     val through = base.map(_._2).getOrElse(-1L)
-    val segs = keeperVersions(fs, s"$outDir/keepers", KeeperSegmentMarker)
+    val segs = keeperVersions(fs, s"$outDir/keepers", StateDir.SegmentMarker)
       .filter(v => v._2 && v._1 > through)
     val foldable = if (includeNewest) segs else segs.dropRight(1)
     // work exists if there are foldable segments, or a legacy full
@@ -790,52 +731,18 @@ object StreamingCorpus {
       // stranded at or below the sidecar watermark (reads already
       // ignore them). Only under a SIDECAR base — when the base IS the
       // legacy full chain, dirs at the watermark are the base itself.
-      if (base.exists(_._3 >= 0)) {
-        keeperVersions(fs, s"$outDir/keepers", KeeperSegmentMarker)
-          .filter(_._1 <= through).foreach { case (v, _, _) =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$outDir/keepers/v=$v"), true)
-          }
-        keeperVersions(fs, s"$outDir/keeperflips", "__none")
-          .filter(_._1 <= through).foreach { case (v, _, _) =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$outDir/keeperflips/v=$v"), true)
-          }
-      }
+      if (base.exists(_._3 >= 0))
+        segDirs.foreach(d => StateDir.delete(fs, d,
+          StateDir.versions(fs, d).filter(_ <= through)))
       return
     }
     val newThrough = foldable.map(_._1).maxOption.getOrElse(through)
-    readRekeyedKeeperState(spark, outDir, newThrough + 1) match {
-      case Some(view) =>
-        val compacted = compactor(view)
-        val nextBase = keeperVersions(fs, baseDir,
-            StreamingIndex.KeymapCommitMarker)
-          .filter(_._2).map(_._1).maxOption.map(_ + 1).getOrElse(0L)
-        compacted.write.mode("overwrite")
-          .parquet(s"$baseDir/v=$nextBase")
-        val mk = new org.apache.hadoop.fs.Path(
-          s"$baseDir/v=$nextBase/" + StreamingIndex.KeymapCommitMarker)
-        val out = fs.create(mk, true)
-        out.write(newThrough.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-        // deletions strictly AFTER the base committed
-        keeperVersions(fs, s"$outDir/keepers", KeeperSegmentMarker)
-          .filter(_._1 <= newThrough).foreach { case (v, _, _) =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$outDir/keepers/v=$v"), true)
-          }
-        keeperVersions(fs, s"$outDir/keeperflips", "__none")
-          .filter(_._1 <= newThrough).foreach { case (v, _, _) =>
-            fs.delete(new org.apache.hadoop.fs.Path(
-              s"$outDir/keeperflips/v=$v"), true)
-          }
-        keeperVersions(fs, baseDir, StreamingIndex.KeymapCommitMarker)
-          .filter(_._1 < nextBase).foreach { case (v, _, _) =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$baseDir/v=$v"),
-              true)
-          }
-      case None => ()
+    readRekeyedKeeperState(spark, outDir, newThrough + 1).foreach { view =>
+      StateDir.commitFold(fs, baseDir,
+          v => StateDir.marked(fs, s"$baseDir/v=$v", StateDir.CommitMarker),
+          newThrough, segDirs) { dir =>
+        compactor(view).write.mode("overwrite").parquet(dir)
+      }
     }
   }
 
@@ -896,10 +803,9 @@ object StreamingCorpus {
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(s"$outDir/keeperflips/v=$batchId"))
-    val segMk = new org.apache.hadoop.fs.Path(
-      s"$outDir/keepers/v=$batchId/$KeeperSegmentMarker")
-    val segFs = segMk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    segFs.create(segMk, true).close()
+    val fs = StateDir.fs(spark, outDir)
+    StateDir.stamp(fs, s"$outDir/keepers/v=$batchId",
+      StateDir.SegmentMarker)
     newState.shards.write.mode("overwrite")
       .parquet(s"$outDir/state/v=$batchId")
     // the SUPERSESSION FEED is published per batch (overwrite — a retry
@@ -918,11 +824,8 @@ object StreamingCorpus {
     newState.superseded.foreach { sup =>
       sup.write.mode("overwrite")
         .parquet(s"$outDir/superseded/batch_id=$batchId")
-      val fm = new org.apache.hadoop.fs.Path(
-        s"$outDir/superseded/batch_id=$batchId/" +
-          StreamingIndex.KeymapCommitMarker)
-      fm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(fm, true).close()
+      StateDir.stamp(fs, s"$outDir/superseded/batch_id=$batchId",
+        StateDir.CommitMarker)
     }
     import spark.implicits._
     Seq(nextBase).toDF("next_base").coalesce(1)
@@ -930,8 +833,7 @@ object StreamingCorpus {
     // NEVER prune the keepers dir: its versions are live SEGMENTS until
     // the fold retires them (the shard-tail and ingest states stay
     // newest-only-read and keep pruning)
-    Seq("state", "ingest").foreach(d =>
-      pruneVersions(spark, s"$outDir/$d"))
+    Seq("state", "ingest").foreach(d => StateDir.prune(fs, s"$outDir/$d"))
     // IN-LOOP state retention: fold the keeper-segment log into a
     // COMPACTED base every Nth batch — bounded rows AND delta-sized
     // per-batch writes; the newest segment stays unfolded (retry
@@ -1064,10 +966,8 @@ object StreamingCorpus {
     // parallel write
     fin.write.mode("overwrite").parquet(s"$outDir/shards_final")
     // marker LAST: a crash before this line leaves a re-closeable sink
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$outDir/shards/$CloseMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
+    StateDir.stamp(StateDir.fs(spark, outDir), s"$outDir/shards",
+      CloseMarker)
     spark.read.parquet(s"$outDir/shards_final")
   }
 
@@ -1138,8 +1038,9 @@ object StreamingCorpus {
     * ([[writeRekeyedCorpusShardBatch]]), consumer
     * ([[StreamingIndex.applySupersessionFeed]]), and compactor
     * ([[graft.api.Graft.corpusSupersessionFeedCompact]]) all share.
-    * Committed = the publisher's own commit marker (stamped LAST since
-    * r18) or the committer's `_SUCCESS` (pre-r18 publishers, hand-built
+    * Committed = the publisher's own commit marker
+    * ([[graft.io.StateDir.CommitMarker]], stamped LAST since r18) or the
+    * committer's `_SUCCESS` (pre-r18 publishers, hand-built
     * feeds), OR any newer `batch_id` dir exists: the publisher is
     * serial (one foreachBatch at a time under the `_OWNER` lock), so
     * batch B's publish completed before B+1's dir could be created —
@@ -1151,43 +1052,12 @@ object StreamingCorpus {
   private[graft] def feedBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
                                    feedRoot: String)
       : Seq[(Long, String, Boolean, Boolean)] = {
-    val p = new org.apache.hadoop.fs.Path(feedRoot)
-    if (!fs.exists(p)) Nil
-    else {
-      val bRe = "batch_id=(\\d+)".r
-      val raw = fs.listStatus(p).toSeq.flatMap { d =>
-        d.getPath.getName match {
-          case bRe(b) if d.isDirectory => Some((b.toLong, d.getPath))
-          case _ => None
-        }
-      }.sortBy(_._1)
-      val maxB = raw.lastOption.map(_._1).getOrElse(-1L)
-      raw.map { case (b, path) =>
-        val hasData = fs.listStatus(path).exists(st =>
-          st.getPath.getName.startsWith("part-") && st.getLen > 0)
-        val committed = b < maxB ||
-          StreamingIndex.keymapCommitted(fs, path)
-        (b, path.toString, hasData, committed)
-      }
-    }
-  }
-
-  /** Delete all but the 3 newest `v=<n>` state versions under `dir` —
-    * only the newest below the current batch is ever read again.
-    */
-  private[graft] def pruneVersions(spark: SparkSession, dir: String): Unit = {
-    val sPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sPath)) {
-      val vRe = "v=(\\d+)".r
-      fs.listStatus(sPath).toSeq
-        .flatMap(st => st.getPath.getName match {
-          case vRe(n) => Some(n.toLong)
-          case _ => None
-        })
-        .sorted.dropRight(3)
-        .foreach(v => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true))
+    val raw = StateDir.entries(fs, feedRoot, "batch_id")
+      .filter(_._2.isDirectory).map { case (b, st) => (b, st.getPath.toString) }
+    val maxB = raw.lastOption.map(_._1).getOrElse(-1L)
+    raw.map { case (b, path) =>
+      (b, path, StateDir.hasData(fs, path),
+        b < maxB || StateDir.committed(fs, path))
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ext.Similarity
+import graft.io.StateDir
 
 /** Streaming ANN index maintenance: embedding rows land continuously
   * (the 100 TB-corpus shape — an embedding service emits vectors as
@@ -76,32 +77,6 @@ object StreamingIndex {
     Similarity.bucketedNN(spark.read.parquet(indexDir), idCol, vecCol,
       "cell", k = k, maxBucket = maxBucket)
 
-  /** The keymap version's OWN commit marker, written LAST by every
-    * absorb (and by [[seedIndexKeymap]]). The committer's `_SUCCESS` is
-    * NOT the commit record here: deployments that suppress marker files
-    * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`,
-    * object-store tooling that drops underscore files — the exact mode
-    * [[graft.ext.AnnIndex.readTombstones]] is hardened against) would
-    * silently re-take the convergence path on every re-delivery AND let
-    * [[seedIndexKeymap]] re-seed a live loop. A version carrying EITHER
-    * marker reads as committed (pre-r17 keymaps wrote only `_SUCCESS`);
-    * new writes always stamp this one.
-    */
-  private[graft] val KeymapCommitMarker = "_GRAFT_COMMIT"
-
-  /** Is this keymap version directory committed? Own marker (always
-    * stamped since r17) or the committer's `_SUCCESS` (pre-r17 layout).
-    * Doubles as the generic directory-commit probe of the supersession
-    * feed protocol (feed batch dirs, archive snapshots — r18): part-file
-    * presence is never a commit record anywhere in this state machinery,
-    * because a crash mid-job-commit exposes a partially-written dir
-    * whose visible part files read fine.
-    */
-  private[graft] def keymapCommitted(fs: org.apache.hadoop.fs.FileSystem,
-                                     vDir: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(vDir, KeymapCommitMarker)) ||
-      fs.exists(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS"))
-
   /** AMBIGUOUS-ARCHIVE guard shared by the supersession feed's apply
     * ([[applySupersessionFeed]]) and compact
     * ([[graft.api.Graft.corpusSupersessionFeedCompact]]) paths (ADVICE
@@ -133,24 +108,11 @@ object StreamingIndex {
                                             feedRoot: String,
                                             archDir: String,
                                             who: String): Unit = {
-    val archPath = new org.apache.hadoop.fs.Path(archDir)
-    if (!fs.exists(archPath)) return
-    val vRe = "v=(\\d+)".r
-    val versions = fs.listStatus(archPath).toSeq
-      .flatMap(_.getPath.getName match {
-        case vRe(n) => Some(n.toLong)
-        case _ => None
-      }).sorted
-    def hasData(v: Long): Boolean =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$archDir/v=$v"))
-        .exists(st => st.getPath.getName.startsWith("part-") &&
-          st.getLen > 0)
-    def isCommitted(v: Long): Boolean =
-      keymapCommitted(fs, new org.apache.hadoop.fs.Path(s"$archDir/v=$v"))
-    val dataVs = versions.filter(hasData)
-    val newestCommitted = dataVs.filter(isCommitted).lastOption
+    val dataVs = StateDir.scan(fs, archDir, StateDir.committed(fs, _))
+      .filter(_._3)
+    val newestCommitted = dataVs.filter(_._2).lastOption.map(_._1)
     dataVs.lastOption
-      .filter(v => !isCommitted(v) && newestCommitted.forall(_ < v))
+      .collect { case (v, false, _) if newestCommitted.forall(_ < v) => v }
       .foreach { v =>
         def batchIds(vd: Long): Set[Long] = spark.read
           .parquet(s"$archDir/v=$vd")
@@ -168,7 +130,7 @@ object StreamingIndex {
             "damage. Ignoring it would strand that history " +
             "(uncommitted snapshots are never carried or read). If " +
             "the snapshot is known complete, stamp " +
-            s"$archDir/v=$v/$KeymapCommitMarker by hand; if it is a " +
+            s"$archDir/v=$v/${StateDir.CommitMarker} by hand; if it is a " +
             "known-crashed compact's torn write, delete the version " +
             "and re-run")
       }
@@ -195,29 +157,16 @@ object StreamingIndex {
     * version a full map, no base sidecar) read correctly through the
     * same latest-wins rule — a newer full map wins every key it
     * carries, and carry-forward means it carries them all.
-    */
-  private val keymapSegRe = "v=(\\d+)".r
-
-  /** List a keymap-family directory's versions: (version, committed,
-    * hasData). Committed is MARKER-based ([[keymapCommitted]] — the
-    * protocol signal); hasData is PART-FILE-based (the read signal: an
-    * empty batch legitimately commits a data-less segment, which reads
-    * skip).
+    *
+    * A keymap-family version (segment, base, feed archive snapshot) is
+    * committed by its [[graft.io.StateDir.CommitMarker]] or, for versions
+    * written before the marker existed, the committer's `_SUCCESS`
+    * ([[graft.io.StateDir.committed]]); part-file presence is never a
+    * commit record here.
     */
   private def listVersions(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: String): Seq[(Long, Boolean, Boolean)] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(path)) Nil
-    else fs.listStatus(path).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case keymapSegRe(n) =>
-          val hasData = fs.listStatus(st.getPath).exists(f =>
-            f.getPath.getName.startsWith("part-") && f.getLen > 0)
-          Some((n.toLong, keymapCommitted(fs, st.getPath), hasData))
-        case _ => None
-      }
-    }.sortBy(_._1)
-  }
+                           dir: String): Seq[(Long, Boolean, Boolean)] =
+    StateDir.scan(fs, dir, StateDir.committed(fs, _))
 
   /** The folded-through segment version of the newest committed base
     * (read from the base marker's content), with the base dir — None
@@ -226,19 +175,8 @@ object StreamingIndex {
   private def newestBase(fs: org.apache.hadoop.fs.FileSystem,
                          baseDir: String): Option[(Long, Long, Boolean)] =
     listVersions(fs, baseDir).reverse.collectFirst(Function.unlift {
-      case (v, committed, hasData) if committed =>
-        val mk = new org.apache.hadoop.fs.Path(
-          s"$baseDir/v=$v/$KeymapCommitMarker")
-        val t = scala.util.Try {
-          val in = fs.open(mk)
-          try {
-            val buf = new Array[Byte](64)
-            val n = in.read(buf)
-            new String(buf, 0, math.max(n, 0),
-              java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-          } finally in.close()
-        }.toOption
-        t.map(through => (v, through, hasData))
+      case (v, true, hasData) =>
+        StateDir.watermark(fs, s"$baseDir/v=$v").map((v, _, hasData))
       case _ => None
     })
 
@@ -257,8 +195,7 @@ object StreamingIndex {
                           beforeBatch: Long): Seq[(Long, String)] = {
     val keymapDir = s"$indexDir/keymap"
     val baseDir = s"$indexDir/keymapbase"
-    val fs = new org.apache.hadoop.fs.Path(keymapDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, keymapDir)
     val base = newestBase(fs, baseDir)
     val through = base.map(_._2).getOrElse(-1L)
     val segs = listVersions(fs, keymapDir)
@@ -333,21 +270,10 @@ object StreamingIndex {
                                 indexDir: String): Unit = {
     val keymapDir = s"$indexDir/keymap"
     val baseDir = s"$indexDir/keymapbase"
-    val fs = new org.apache.hadoop.fs.Path(keymapDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, keymapDir)
     val base = newestBase(fs, baseDir)
     val through = base.map(_._2).getOrElse(-1L)
     val segs = listVersions(fs, keymapDir).filter(_._1 > through)
-    def deleteFolded(upto: Long): Unit = {
-      listVersions(fs, keymapDir).filter(_._1 <= upto).foreach { case (v, _, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$keymapDir/v=$v"), true)
-      }
-      base.foreach { case (bv, _, _) =>
-        listVersions(fs, baseDir).filter(_._1 < bv).foreach { case (v, _, _) =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$baseDir/v=$v"), true)
-        }
-      }
-    }
     // fold everything but the NEWEST committed segment: its commit
     // marker is the only re-delivery shield for the most recent batch
     // until the stream's checkpoint commits behind it — folding it away
@@ -362,45 +288,29 @@ object StreamingIndex {
     if (foldable.isEmpty) {
       // nothing safely foldable; still clear leftovers a crashed
       // deletion stranded
-      deleteFolded(through)
+      StateDir.delete(fs, keymapDir,
+        StateDir.versions(fs, keymapDir).filter(_ <= through))
+      base.foreach { case (bv, _, _) =>
+        StateDir.delete(fs, baseDir,
+          StateDir.versions(fs, baseDir).filter(_ < bv))
+      }
       return
     }
     val newThrough = foldable.map(_._1).max
     keymapParts(spark, indexDir, newThrough + 1) match {
       case parts if parts.nonEmpty =>
-        val nextBase = listVersions(fs, baseDir)
-          .filter(_._2).map(_._1).sorted.lastOption.map(_ + 1)
-          .getOrElse(0L)
-        latestWins(parts, spark)
-          .write.mode("overwrite").parquet(s"$baseDir/v=$nextBase")
-        val mk = new org.apache.hadoop.fs.Path(
-          s"$baseDir/v=$nextBase/$KeymapCommitMarker")
-        val out = fs.create(mk, true)
-        out.write(newThrough.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-        // deletions strictly AFTER the base committed; re-read `base`
-        // would now name the new one — delete the folded segments and
-        // the superseded older bases
-        listVersions(fs, keymapDir).filter(_._1 <= newThrough)
-          .foreach { case (v, _, _) =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$keymapDir/v=$v"),
-              true)
-          }
-        listVersions(fs, baseDir).filter(_._1 < nextBase)
-          .foreach { case (v, _, _) =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$baseDir/v=$v"),
-              true)
-          }
+        StateDir.commitFold(fs, baseDir,
+            v => StateDir.committed(fs, s"$baseDir/v=$v"), newThrough,
+            Seq(keymapDir)) { dir =>
+          latestWins(parts, spark).write.mode("overwrite").parquet(dir)
+        }
       case _ =>
         // only data-less segments below the newest (a run of empty
         // batches): no base to write, but the dirs themselves must not
         // accumulate forever — committed AND data-less is safe to drop
         // (a re-delivery converges by rewriting an empty segment)
-        foldable.filter(v => v._2 && !v._3).foreach { case (v, _, _) =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$keymapDir/v=$v"),
-            true)
-        }
+        StateDir.delete(fs, keymapDir,
+          foldable.filter(v => v._2 && !v._3).map(_._1))
     }
   }
 
@@ -419,11 +329,12 @@ object StreamingIndex {
     * new vector enters under the frozen geometry via
     * [[graft.ext.AnnIndex.add]].
     *
-    * EXACTLY-ONCE: the keymap version's [[KeymapCommitMarker]] (the
-    * loop's OWN commit record, written after the keymap parquet — the
-    * committer's `_SUCCESS` is suppressed on some deployments, and the
-    * bare directory exists from job SETUP, so neither can be the
-    * completed-batch signal) is the batch's commit marker — a
+    * EXACTLY-ONCE: the keymap version's
+    * [[graft.io.StateDir.CommitMarker]] (the loop's OWN commit record,
+    * written after the keymap parquet — the committer's `_SUCCESS` is
+    * suppressed on some deployments, and the bare directory exists from
+    * job SETUP, so neither can be the completed-batch signal) is the
+    * batch's commit marker — a
     * re-delivered batch whose marker exists skips entirely. A retry of
     * a PARTIALLY-applied batch converges: supersede is idempotent
     * (tombstone set semantics), the add step skips when every batch uid
@@ -473,15 +384,14 @@ object StreamingIndex {
     // unlike the full-map-per-version layouts, every segment is live
     // data until [[foldKeymap]] collapses it into the base.
     val vNum = batchId + 1
-    val vDir = new org.apache.hadoop.fs.Path(s"$keymapDir/v=$vNum")
-    val fs = vDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val vDir = s"$keymapDir/v=$vNum"
     // completed batch re-delivered: skip. Committed = EITHER marker
-    // ([[keymapCommitted]]) — a pre-r17 batch committed only _SUCCESS,
-    // and keying the skip on the own marker alone would re-run that
-    // batch's whole absorb on a post-upgrade re-delivery (it converges
+    // ([[graft.io.StateDir.committed]]) — a pre-r17 batch committed only
+    // _SUCCESS, and keying the skip on the own marker alone would re-run
+    // that batch's whole absorb on a post-upgrade re-delivery (it converges
     // via the retained maps, but re-executes supersede/add and rewrites
     // the version needlessly — the skip exists to make re-delivery cheap)
-    if (keymapCommitted(fs, vDir)) return
+    if (StateDir.committed(StateDir.fs(spark, vDir), vDir)) return
     absorbKeyedCore(batch, vNum, indexDir, keyCol, uidCol, vecCol,
       maxAddedFraction, "graft index loop")
     // retention: fold the segment log every Nth batch (amortizes the
@@ -596,10 +506,8 @@ object StreamingIndex {
       delta.select(col("key"), col("uid"))
         .coalesce(math.max(1L, math.min(32L, n / 1000000L + 1L)).toInt)
         .write.mode("overwrite").parquet(s"$keymapDir/v=$vNum")
-      val mk = new org.apache.hadoop.fs.Path(
-        s"$keymapDir/v=$vNum/$KeymapCommitMarker")
-      val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.create(mk, true).close()
+      StateDir.stamp(StateDir.fs(spark, keymapDir), s"$keymapDir/v=$vNum",
+        StateDir.CommitMarker)
     }
   }
 
@@ -658,10 +566,10 @@ object StreamingIndex {
                       keys: DataFrame, keyCol: String,
                       uidCol: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/keymap")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // committed = EITHER marker ([[KeymapCommitMarker]] since r17, the
-    // committer's _SUCCESS for pre-r17 versions): the refusal must stay
-    // conservative — on marker-suppressing deployments only the own
+    val fs = StateDir.fs(spark, indexDir)
+    // committed = EITHER marker ([[graft.io.StateDir.CommitMarker]] since
+    // r17, the committer's _SUCCESS for pre-r17 versions): the refusal
+    // must stay conservative — on marker-suppressing deployments only the own
     // marker exists, and keying the refusal on _SUCCESS alone would
     // silently re-seed a live loop there. A folded base counts too: a
     // long-lived loop may hold ALL its state in `keymapbase` with every
@@ -669,7 +577,7 @@ object StreamingIndex {
     val committed =
       (fs.exists(p) && fs.listStatus(p).exists(st =>
         st.getPath.getName.startsWith("v=") &&
-          keymapCommitted(fs, st.getPath))) ||
+          StateDir.committed(fs, st.getPath.toString))) ||
         newestBase(fs, s"$indexDir/keymapbase").isDefined
     require(!committed,
       s"seedIndexKeymap: $indexDir/keymap already holds a committed " +
@@ -681,11 +589,9 @@ object StreamingIndex {
     keys.select(col(keyCol).as("key"), col(uidCol).as("uid"))
       .write.mode("overwrite").parquet(s"$indexDir/keymap/v=0")
     // own commit marker LAST: a crash before this line leaves a torn
-    // v=0 that the prior-read refuses loudly ([[latestCommittedKeymap]])
+    // v=0 that the prior-read refuses loudly ([[keymapParts]])
     // and a re-run replaces — never a silently partial key→uid map
-    val mk = new org.apache.hadoop.fs.Path(
-      s"$indexDir/keymap/v=0/$KeymapCommitMarker")
-    fs.create(mk, true).close()
+    StateDir.stamp(fs, s"$indexDir/keymap/v=0", StateDir.CommitMarker)
   }
 
   /** The NIGHTLY-JOB shape of the keyed index absorb — apply one keyed
@@ -718,26 +624,20 @@ object StreamingIndex {
                        keymapFoldEveryBatches: Int = 16): Unit = {
     val keymapDir = s"$indexDir/keymap"
     val owner = new org.apache.hadoop.fs.Path(s"$indexDir/_OWNER")
-    val fs = owner.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, indexDir)
     require(!fs.exists(owner),
       s"absorbKeyedDelta: $indexDir is owned by a streaming " +
         s"persisted-index loop ($indexDir/_OWNER) — a batch absorb would " +
         "race its keymap versioning. Stop the loop (and delete _OWNER " +
         "if it is dead) before absorbing batch deltas")
     val lock = new org.apache.hadoop.fs.Path(s"$indexDir/_ABSORB")
-    fs.mkdirs(lock.getParent)
-    val out =
-      try fs.create(lock, false)
-      catch {
-        case _: java.io.IOException =>
-          throw new IllegalStateException(
-            s"absorbKeyedDelta: another batch absorb holds " +
-              s"$indexDir/_ABSORB — keyed absorbs are single-writer " +
-              "(two would race the keymap version). If the other absorb " +
-              "crashed and is confirmed dead, delete the marker to retry")
-      }
+    if (!StateDir.createExclusive(fs, lock))
+      throw new IllegalStateException(
+        s"absorbKeyedDelta: another batch absorb holds " +
+          s"$indexDir/_ABSORB — keyed absorbs are single-writer " +
+          "(two would race the keymap version). If the other absorb " +
+          "crashed and is confirmed dead, delete the marker to retry")
     try {
-      out.close()
       // max(newest COMMITTED segment, the base's folded-through
       // watermark) + 1: a torn newer slot (crashed prior absorb) is
       // exactly the slot this retry overwrites, and a fresh slot always
@@ -745,12 +645,9 @@ object StreamingIndex {
       // be invisible to every read. No committed state at all: v=1 —
       // v=0 stays the seed's slot (a torn v=0 trips the prior-read's
       // loud guard inside the core, naming the re-seed)
-      val vNum = {
-        val committedMax = listVersions(fs, keymapDir)
-          .filter(_._2).map(_._1).maxOption
-        val through = newestBase(fs, s"$indexDir/keymapbase").map(_._2)
-        (committedMax.toSeq ++ through.toSeq ++ Seq(0L)).max + 1
-      }
+      val vNum = StateDir.nextSlot(
+        listVersions(fs, keymapDir).filter(_._2).map(_._1) ++
+          newestBase(fs, s"$indexDir/keymapbase").map(_._2) :+ 0L)
       absorbKeyedCore(delta, vNum, indexDir, keyCol, uidCol, vecCol,
         maxAddedFraction, "graft index absorb")
       // fold when the segment log reaches the knob (the nightly-job
@@ -778,46 +675,28 @@ object StreamingIndex {
     */
   private[graft] def readAppliedThrough(spark: SparkSession,
                                         indexDir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$indexDir/feedcursor")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) -1L
-    else {
-      val vRe = "v=(\\d+)".r
-      fs.listStatus(path).toSeq
-        .flatMap(_.getPath.getName match {
-          case vRe(n) => Some(n.toLong)
-          case _ => None
-        })
-        .sorted.reverse
-        .collectFirst(Function.unlift { v =>
-          val vd = s"$indexDir/feedcursor/v=$v"
-          val ok = fs.listStatus(new org.apache.hadoop.fs.Path(vd))
-            .exists(st => st.getPath.getName.startsWith("part-") &&
-              st.getLen > 0)
-          if (ok) Some(spark.read.parquet(vd).head()
-            .getAs[Long]("applied_through"))
-          else None // torn cursor version: fall through to the previous
-        })
-        .getOrElse(-1L)
-    }
+    val dir = s"$indexDir/feedcursor"
+    val fs = StateDir.fs(spark, dir)
+    StateDir.versions(fs, dir).reverse
+      .collectFirst(Function.unlift { v =>
+        val vd = s"$dir/v=$v"
+        // torn cursor version: fall through to the previous
+        if (StateDir.hasData(fs, vd))
+          Some(spark.read.parquet(vd).head().getAs[Long]("applied_through"))
+        else None
+      })
+      .getOrElse(-1L)
   }
 
   private def advanceAppliedThrough(spark: SparkSession, indexDir: String,
                                     through: Long): Unit = {
     import spark.implicits._
-    val path = new org.apache.hadoop.fs.Path(s"$indexDir/feedcursor")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vRe = "v=(\\d+)".r
-    val next =
-      if (!fs.exists(path)) 0L
-      else fs.listStatus(path).toSeq
-        .flatMap(_.getPath.getName match {
-          case vRe(n) => Some(n.toLong)
-          case _ => None
-        }).sorted.lastOption.map(_ + 1).getOrElse(0L)
+    val dir = s"$indexDir/feedcursor"
+    val fs = StateDir.fs(spark, dir)
+    val next = StateDir.nextSlot(StateDir.versions(fs, dir))
     Seq(through).toDF("applied_through").coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/feedcursor/v=$next")
-    StreamingCorpus.pruneVersions(spark, s"$indexDir/feedcursor")
+      .write.mode("overwrite").parquet(s"$dir/v=$next")
+    StateDir.prune(fs, dir)
   }
 
   /** Apply the REKEYED CORPUS LOOP'S published supersession feed to a
@@ -862,8 +741,7 @@ object StreamingIndex {
                             indexDir: String,
                             idCol: String = "ingest_id"): (Long, Long) = {
     val A = graft.ext.AnnIndex
-    val feedPath = new org.apache.hadoop.fs.Path(s"$corpusOutDir/superseded")
-    val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, s"$corpusOutDir/superseded")
     val applied = readAppliedThrough(spark, indexDir)
     // unapplied data-carrying batch dirs, with their commit status
     // ([[StreamingCorpus.feedBatchDirs]]: the publisher's own marker /
@@ -888,7 +766,6 @@ object StreamingIndex {
     // the compact deletes folded dirs strictly AFTER its snapshot
     // commits, so a torn snapshot's content still exists as raw dirs.
     val archDir = s"$corpusOutDir/superseded_archive"
-    val archPath = new org.apache.hadoop.fs.Path(archDir)
     // a snapshot with no commit record reads as absent below — safe for
     // a crashed compact's torn write (its content still exists as raw
     // dirs), SILENT HISTORY LOSS for a complete-but-unmarked snapshot
@@ -897,27 +774,14 @@ object StreamingIndex {
     // Same coverage arbitration as the compact path, shared helper.
     requireArchiveCoverage(spark, fs, s"$corpusOutDir/superseded",
       archDir, "applySupersessionFeed")
-    val archive: Option[DataFrame] =
-      if (!fs.exists(archPath)) None
-      else {
-        val vRe = "v=(\\d+)".r
-        fs.listStatus(archPath).toSeq
-          .flatMap(_.getPath.getName match {
-            case vRe(n) => Some(n.toLong)
-            case _ => None
-          })
-          .sorted.reverse
-          .collectFirst(Function.unlift { v =>
-            val vd = s"$archDir/v=$v"
-            val vp = new org.apache.hadoop.fs.Path(vd)
-            val ok = keymapCommitted(fs, vp) &&
-              fs.listStatus(vp).exists(st =>
-                st.getPath.getName.startsWith("part-") && st.getLen > 0)
-            if (ok) Some(spark.read.parquet(vd)
-              .filter(col("batch_id").cast("long") > applied))
-            else None
-          })
-      }
+    val archive: Option[DataFrame] = StateDir.versions(fs, archDir).reverse
+      .collectFirst(Function.unlift { v =>
+        val vd = s"$archDir/v=$v"
+        if (StateDir.committed(fs, vd) && StateDir.hasData(fs, vd))
+          Some(spark.read.parquet(vd)
+            .filter(col("batch_id").cast("long") > applied))
+        else None
+      })
     graft.ext.CacheScope.scoped {
       val archPendingMax: Option[Long] = archive.flatMap { a =>
         val r = a.agg(max(col("batch_id").cast("long"))).head()

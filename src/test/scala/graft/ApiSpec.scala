@@ -1067,7 +1067,7 @@ class ApiSpec extends SparkSpec {
     assert(fsF.exists(basePath) && fsF.listStatus(basePath).exists(st =>
       st.getPath.getName.startsWith("v=") &&
         fsF.exists(new org.apache.hadoop.fs.Path(st.getPath,
-          SI.KeymapCommitMarker))),
+          graft.io.StateDir.CommitMarker))),
       "the facade's segment-count fold never committed a base")
     val kmF = SI.readKeymapView(spark, dirF).get
     assert(kmF.exceptAll(kmS).isEmpty && kmS.exceptAll(kmF).isEmpty,

@@ -303,14 +303,15 @@ class MlSpec extends SparkSpec {
     out
   }
 
-  /** How [[Anomaly.fitKMeans]] on `f` misses MLlib's `KMeans.fit` on the
-    * same frame (centers and training cost bit for bit, iteration count,
-    * every row's cluster), and the jobs fitKMeans ran.
+  /** How [[Anomaly.fitKMeans]] on `f` misses MLlib's row-solver
+    * `KMeans.fit` on the same frame (centers and training cost bit for
+    * bit, iteration count, every row's cluster), and the jobs fitKMeans
+    * ran.
     */
   private def kmeansMisses(what: String, f: DataFrame, k: Int, seed: Long)
       : (Seq[String], Long) = {
     import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-    val ref = new KMeans().setK(k).setSeed(seed)
+    val ref = new KMeans().setK(k).setSeed(seed).setSolver("row")
       .setFeaturesCol("scaled_features").setPredictionCol("cluster").fit(f)
     val (got, jobs) = jobsOf(Anomaly.fitKMeans(f, k, seed))
     def bits(m: KMeansModel) = m.clusterCenters.toSeq
@@ -361,13 +362,13 @@ class MlSpec extends SparkSpec {
       misses ++= m
       if (jobs != 1) misses += s"$name, k=$k, seed=$seed: $jobs jobs"
     }
-    // fewer rows than features: ml's `auto` solver picks its block solver
-    // there, so the fit is MLlib's own
+    // fewer rows than features: the row solver fits them in one task too
+    // (ml's `auto` solver would pick its block solver here, which fails)
     val (m, jobs) = kmeansMisses("3 rows of 4 features", frame(Seq(
       Vectors.dense(1.0, 2.0, 3.0, 4.0), Vectors.dense(0.0, 2.0, 3.0, 4.0),
       Vectors.dense(1.0, 5.0, 3.0, 4.0))), 2, 42L)
     misses ++= m
-    if (jobs <= 1) misses += s"3 rows of 4 features: $jobs jobs"
+    if (jobs != 1) misses += s"3 rows of 4 features: $jobs jobs"
     (anomalyInputs ++ edges).foreach(_._2.unpersist())
     assert(misses.isEmpty, misses.mkString("\n", "\n", ""))
   }
@@ -379,7 +380,7 @@ class MlSpec extends SparkSpec {
     val one = scaledAnomalyInput(benchShaped(7, "2013-03-18"))
     val three = one.repartition(3).cache()
     three.count()
-    val km = new KMeans().setK(5).setSeed(42L)
+    val km = new KMeans().setK(5).setSeed(42L).setSolver("row")
       .setFeaturesCol("scaled_features").setPredictionCol("cluster")
     val ref = km.fit(three)
     val (got, jobs) = jobsOf(Anomaly.fitKMeans(three, 5, 42L))
@@ -390,15 +391,29 @@ class MlSpec extends SparkSpec {
     assert(math.abs(got.summary.trainingCost - ref.summary.trainingCost) <=
       1e-12 * ref.summary.trainingCost)
     Seq(one, three).foreach(_.unpersist())
-    // an empty frame fails as MLlib fails: ml's `auto` solver summarizes
-    // the input before any k-means step
+    // an empty frame fails as MLlib's row solver fails, naming the RDD it
+    // sampled (whose id differs between the two fits)
     val empty = Seq.empty[Tuple1[Vector]].toDF("scaled_features").coalesce(1)
     def root(t: Throwable): Throwable =
       if (t.getCause == null) t else root(t.getCause)
+    def masked(t: Throwable) =
+      t.getMessage.replaceAll("RDD\\[\\d+\\]", "RDD[n]")
     val want = root(intercept[Exception](km.fit(empty)))
     val fail = root(intercept[Exception](Anomaly.fitKMeans(empty, 5, 42L)))
-    assert(fail.getClass == want.getClass &&
-      fail.getMessage == want.getMessage, s"$fail vs $want")
+    assert(fail.getClass == want.getClass && masked(fail) == masked(want),
+      s"$fail vs $want")
+  }
+
+  test("anomaly: 1, 2 and 3 scored rows come back flagged") {
+    val preds = daily.orderBy("user_id", "date").limit(3)
+      .select(col("user_id"), col("date"),
+        (col("daily_value") * 0.9).as("prediction")).cache()
+    try for (n <- 1 to 3) {
+      val out = Anomaly.run(daily, preds.limit(n)).collect()
+      assert(out.length == n, s"$n scored rows")
+      assert(out.forall(r => Set(0, 1).contains(r.getAs[Int]("is_anomaly"))),
+        s"$n scored rows: ${out.mkString(" ")}")
+    } finally preds.unpersist()
   }
 
   test("anomaly: clusters in range, rate bounded, deterministic with seed") {

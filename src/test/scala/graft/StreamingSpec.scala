@@ -663,7 +663,7 @@ class StreamingSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fsIdx.exists(new org.apache.hadoop.fs.Path(
       s"$indexDir/keymap/v=2/" +
-        graft.streaming.StreamingIndex.KeymapCommitMarker)),
+        graft.io.StateDir.CommitMarker)),
       "no own commit marker under the committed keymap version")
     val stBefore = A.stats(spark, indexDir).head().toSeq
     SI.writeIndexBatch(reembeds, 1L, indexDir, "key", "vec_id",
@@ -765,14 +765,14 @@ class StreamingSpec extends SparkSpec {
     // NEWEST segment (v=2 — batch 1's own, still inside its
     // checkpoint-commit window) kept alive with its skip marker
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$indexDir/keymapbase/v=0/" + SI.KeymapCommitMarker)),
+      s"$indexDir/keymapbase/v=0/" + graft.io.StateDir.CommitMarker)),
       "fold must commit a base version")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$indexDir/keymap/v=0")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/keymap/v=1")),
       "fold must delete the segments it folded")
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$indexDir/keymap/v=2/" + SI.KeymapCommitMarker)),
+      s"$indexDir/keymap/v=2/" + graft.io.StateDir.CommitMarker)),
       "fold must keep the newest segment and its re-delivery marker")
     // the view is the same map the unfolded log would serve: every b0
     // key still present, every b1 key at its NEW uid, built keys intact
@@ -840,7 +840,7 @@ class StreamingSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new org.apache.hadoop.fs.Path(
-      s"$indexDir/keymap/v=0/" + SI.KeymapCommitMarker), false))
+      s"$indexDir/keymap/v=0/" + graft.io.StateDir.CommitMarker), false))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$indexDir/keymap/v=0/_SUCCESS")),
       "fixture broken: the committer never wrote _SUCCESS here")
@@ -1172,7 +1172,7 @@ class StreamingSpec extends SparkSpec {
     // the publisher commits the batch (marker stamped LAST) — the
     // cursor passes it and applies go quiet
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$corpusOut/superseded/batch_id=2/" + SI.KeymapCommitMarker),
+      s"$corpusOut/superseded/batch_id=2/" + graft.io.StateDir.CommitMarker),
       true).close()
     assert(SI.applySupersessionFeed(spark, corpusOut, indexDir) ==
       (3L, 0L))
@@ -1234,7 +1234,7 @@ class StreamingSpec extends SparkSpec {
     // with the marker stamped before any delete
     assert(G.corpusSupersessionFeedCompact(spark, corpusOut) == 2L)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$corpusOut/superseded_archive/v=1/" + SI.KeymapCommitMarker)),
+      s"$corpusOut/superseded_archive/v=1/" + graft.io.StateDir.CommitMarker)),
       "the snapshot's own commit marker must be stamped")
     assert(spark.read.parquet(s"$corpusOut/superseded_archive/v=1")
       .count() == 5L)
@@ -1245,7 +1245,7 @@ class StreamingSpec extends SparkSpec {
     // deployment) — compact must refuse loudly, never silently write a
     // snapshot that strands the unmarked history
     fs.delete(new org.apache.hadoop.fs.Path(
-      s"$corpusOut/superseded_archive/v=1/" + SI.KeymapCommitMarker),
+      s"$corpusOut/superseded_archive/v=1/" + graft.io.StateDir.CommitMarker),
       false)
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$corpusOut/superseded_archive/v=1/_SUCCESS"), false)
@@ -1259,7 +1259,7 @@ class StreamingSpec extends SparkSpec {
       s"wrong refusal: ${e.getMessage}")
     // the named resolution works: stamp the marker by hand, retry folds
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$corpusOut/superseded_archive/v=1/" + SI.KeymapCommitMarker),
+      s"$corpusOut/superseded_archive/v=1/" + graft.io.StateDir.CommitMarker),
       true).close()
     assert(G.corpusSupersessionFeedCompact(spark, corpusOut) == 1L)
     assert(spark.read.parquet(s"$corpusOut/superseded_archive/v=2")
@@ -1306,7 +1306,7 @@ class StreamingSpec extends SparkSpec {
     // committed version existed — compact silently carried from v=0
     // and the apply silently read v=0, both stranding batch 3 forever.
     fs.delete(new org.apache.hadoop.fs.Path(
-      s"$corpusOut/superseded_archive/v=2/" + SI.KeymapCommitMarker),
+      s"$corpusOut/superseded_archive/v=2/" + graft.io.StateDir.CommitMarker),
       false)
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$corpusOut/superseded_archive/v=2/_SUCCESS"), false)
@@ -1331,7 +1331,7 @@ class StreamingSpec extends SparkSpec {
     // named resolution: stamp the snapshot by hand — both paths proceed
     // and the full history (archive batches 1-3 + live batch 4) applies
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$corpusOut/superseded_archive/v=2/" + SI.KeymapCommitMarker),
+      s"$corpusOut/superseded_archive/v=2/" + graft.io.StateDir.CommitMarker),
       true).close()
     assert(SI.applySupersessionFeed(spark, corpusOut, indexDir) ==
       (9L, 9L), "archive + live history must all retire")
@@ -1482,7 +1482,7 @@ class StreamingSpec extends SparkSpec {
         (1L, "b", "h1", "en", true, true, 7L)))
       .write.parquet(s"$outDir/keepers/v=0")
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$outDir/keepers/v=0/" + S.KeeperSegmentMarker), true).close()
+      s"$outDir/keepers/v=0/" + graft.io.StateDir.SegmentMarker), true).close()
     // batch 1 CRASHED between its flips write and its segment marker:
     // the flip retires ingest 0, but the replacement row (ingest 2)
     // sits in the torn, marker-less segment
@@ -1499,7 +1499,7 @@ class StreamingSpec extends SparkSpec {
         "compacted state")
     // the batch's retry completes it: marker stamped, the flip applies
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$outDir/keepers/v=1/" + S.KeeperSegmentMarker), true).close()
+      s"$outDir/keepers/v=1/" + graft.io.StateDir.SegmentMarker), true).close()
     val st2 = S.readRekeyedKeeperState(spark, outDir).get
     assert(st2.count() == 3L)
     assert(st2.filter(col("ingest_id") === 0L && col("live")).isEmpty)
@@ -1531,7 +1531,7 @@ class StreamingSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mk = new org.apache.hadoop.fs.Path(
-      s"$indexDir/keymap/v=1/" + SI.KeymapCommitMarker)
+      s"$indexDir/keymap/v=1/" + graft.io.StateDir.CommitMarker)
     assert(fs.exists(mk))
     fs.delete(mk, false)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
@@ -2223,7 +2223,7 @@ class StreamingSpec extends SparkSpec {
     fsFeed.listStatus(new org.apache.hadoop.fs.Path(s"$outDir/superseded"))
       .filter(_.getPath.getName.startsWith("batch_id=")).foreach { d =>
         assert(fsFeed.exists(new org.apache.hadoop.fs.Path(d.getPath,
-          graft.streaming.StreamingIndex.KeymapCommitMarker)),
+          graft.io.StateDir.CommitMarker)),
           s"feed dir ${d.getPath.getName} has no publisher commit marker")
       }
     // RETRY of the last micro-batch: same versioned ingest base and
@@ -2479,7 +2479,7 @@ class StreamingSpec extends SparkSpec {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         assert(fsI.exists(new org.apache.hadoop.fs.Path(
           s"$outI/keepersbase/v=0/" +
-            graft.streaming.StreamingIndex.KeymapCommitMarker)),
+            graft.io.StateDir.CommitMarker)),
           "interval fold never committed a base")
         assert(!fsI.exists(new org.apache.hadoop.fs.Path(
           s"$outI/keepers/v=0")),
@@ -2553,7 +2553,7 @@ class StreamingSpec extends SparkSpec {
       "the fold must retire the subsumed legacy full chain")
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$outDir/keepersbase/v=0/" +
-        graft.streaming.StreamingIndex.KeymapCommitMarker)))
+        graft.io.StateDir.CommitMarker)))
     val folded = S.readRekeyedKeeperState(spark, outDir).get
     assert(folded.exceptAll(view).isEmpty && view.exceptAll(folded)
       .isEmpty,
@@ -2595,7 +2595,7 @@ class StreamingSpec extends SparkSpec {
     // (newest segment v=1 kept — the retry window)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$outDir/keepersbase/v=0/" +
-        graft.streaming.StreamingIndex.KeymapCommitMarker)),
+        graft.io.StateDir.CommitMarker)),
       "digest fold never committed a base")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$outDir/keepers/v=0")), "digest fold left the folded segment")
